@@ -31,7 +31,27 @@ _RUNTIME_CONF = {
     # to µs. tables.normalize_event_ts handles both shapes; keeping the conf
     # set is harmless on builds that ignore it.
     "spark.sql.legacy.parquet.nanosAsLong": "true",
+    # RocksDB state stores commit each key's changes as a changelog file
+    # instead of a checkpoint of the whole instance: commitTimeMs per
+    # trigger of the ODS->ADS stream benchmark ~500 -> ~320 ms (local[4]).
+    # The default HDFS-backed provider ignores it.
+    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled": "true",
 }
+
+# Pinned only on a local[...] master, whose executors are threads of the
+# one local JVM.
+_LOCAL_CONF = {
+    # A file-stream trigger lists its new files through InMemoryFileIndex,
+    # which above 32 paths launches a parallel-listing Spark job; locally
+    # that job is pure overhead (getBatch 450-820 -> 10-70 ms on the stream
+    # benchmark's 60-file triggers, local[4]). Clusters keep Spark's default.
+    "spark.sql.sources.parallelPartitionDiscovery.threshold": str(2**31 - 1),
+}
+
+# (conf, reason) for every pin a host session refused, first refusal only:
+# the engine then runs with the host's value, so a pinned speed-up (or a
+# pinned plan shape) may be missing, and this says which.
+REFUSED_CONFS: list[tuple[str, str]] = []
 
 
 def default_parallelism() -> int:
@@ -75,24 +95,33 @@ def _ship_package(spark: SparkSession) -> None:
         pass  # already added under this name, or a restricted session
 
 
+def _is_local(spark: SparkSession) -> bool:
+    try:
+        master = spark.sparkContext.master
+    except AttributeError:
+        return False  # Spark Connect: no SparkContext on the client
+    return master == "local" or master.startswith("local[")
+
+
 def prepare(spark: SparkSession) -> SparkSession:
-    """Pin runtime confs on an externally provided session. Idempotent."""
+    """Pin runtime confs on an externally provided session. Idempotent.
+    A conf the host refuses keeps the host's value and is recorded in
+    REFUSED_CONFS."""
     _ship_package(spark)
-    for k, v in _RUNTIME_CONF.items():
+    pins = dict(_RUNTIME_CONF)
+    if _is_local(spark):
+        pins.update(_LOCAL_CONF)
+    # Size the shuffle for the host machine unless the host already chose.
+    if "spark.sql.shuffle.partitions" not in os.environ.get(
+        "SPARK_GRAFT_LOCKED_CONFS", ""
+    ):
+        pins["spark.sql.shuffle.partitions"] = str(default_parallelism())
+    for k, v in pins.items():
         try:
             spark.conf.set(k, v)
-        except Exception:
-            pass  # conf locked by the host session; proceed with its value
-    # Size the shuffle for the host machine unless the host already chose.
-    try:
-        if "spark.sql.shuffle.partitions" not in os.environ.get(
-            "SPARK_GRAFT_LOCKED_CONFS", ""
-        ):
-            spark.conf.set(
-                "spark.sql.shuffle.partitions", str(default_parallelism())
-            )
-    except Exception:
-        pass
+        except Exception as e:  # conf locked by the host session
+            if all(k != refused for refused, _ in REFUSED_CONFS):
+                REFUSED_CONFS.append((k, f"{type(e).__name__}: {e}"))
     return spark
 
 

@@ -20,8 +20,8 @@ Scale notes (100 TB): the reader parallelizes by state-store partition
 (one task per shuffle partition of the checkpoint) and supports reading a
 specific `batchId` — inspecting yesterday's state is a batch scan of the
 object-store checkpoint, no stop-the-world savepoint. On RocksDB state
-stores enable changelog checkpointing so the read replays deltas, not
-full snapshots.
+stores the read replays changelog deltas, not full snapshots:
+session.prepare pins changelog checkpointing on every session.
 """
 
 from __future__ import annotations
@@ -116,9 +116,9 @@ def state_changes(
     'delete', key..., value...) row per state mutation, instead of a full
     snapshot per batch. Requires the writing query to run on the RocksDB
     state store with changelog checkpointing enabled
-    (`spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled`
-    — the recommended production configuration anyway: commits upload
-    O(changed keys) changelog files, not full SST snapshots). At 100 TB
+    (`spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled`,
+    which session.prepare pins: commits upload O(changed keys) changelog
+    files, not full SST snapshots). At 100 TB
     this is how state audits stay incremental: diff two days of a huge
     keyed store by scanning only its mutations."""
     reader = (
@@ -274,8 +274,8 @@ def state_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
         the full batch GROUP BY.
 
     All three are order-robust: they hold even if the file source were to
-    assign the halves to batches in the other order. The provider confs
-    are restored after the build so a driver-built session keeps its
+    assign the halves to batches in the other order. The provider conf
+    is restored after the build so a host-built session keeps its
     default store; the checkpoint is cached per (session, sf_dir) and
     removed at exit. At 100 TB this is the incremental audit path: a
     day-over-day state diff scans only changelog files (O(changed keys)),
@@ -319,35 +319,26 @@ def state_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             q.awaitTermination()
 
+        # changelog checkpointing is pinned by session.prepare (Warehouse)
         provider_conf = "spark.sql.streaming.stateStore.providerClass"
-        changelog_conf = (
-            "spark.sql.streaming.stateStore.rocksdb."
-            "changelogCheckpointing.enabled"
-        )
         old_provider = spark.conf.get(provider_conf, None)
-        old_changelog = spark.conf.get(changelog_conf, None)
         spark.conf.set(
             provider_conf,
             "org.apache.spark.sql.execution.streaming.state."
             "RocksDBStateStoreProvider",
         )
-        spark.conf.set(changelog_conf, "true")
         try:
             stage_half(0)
             run_round()  # batch 0: even event_ids only
             stage_half(1)
             run_round()  # batch 1: the odd half arrives
         finally:
-            # Restore BOTH confs symmetrically (set or unset) — a
-            # driver-built session may have pinned either one.
-            for conf_key, prior in (
-                (provider_conf, old_provider),
-                (changelog_conf, old_changelog),
-            ):
-                if prior is None:
-                    spark.conf.unset(conf_key)
-                else:
-                    spark.conf.set(conf_key, prior)
+            # Restore the provider (set or unset): the host session may
+            # have pinned it.
+            if old_provider is None:
+                spark.conf.unset(provider_conf)
+            else:
+                spark.conf.set(provider_conf, old_provider)
 
     root = _cached_build(spark, sf_dir, "state_changes_ckpt", build)
     feed = state_changes(spark, os.path.join(root, "ckpt"))

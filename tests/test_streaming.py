@@ -186,16 +186,14 @@ def test_transform_with_state_latest_image_multibatch(spark, chunked_events_dir)
             "last_event_id",
             "last_type",
             "last_value",
-            (epoch_us(F.col("last_ts")) / F.lit(1_000_000))
-            .cast("long")
-            .alias("last_ts_s"),
+            epoch_us(F.col("last_ts")).alias("last_ts_us"),
         )
         .toPandas()
         .sort_values("user_id")
         .reset_index(drop=True)
     )
     assert len(final) == len(batch)
-    for col in ["user_id", "last_event_id", "last_type"]:
+    for col in ["user_id", "last_event_id", "last_type", "last_value", "last_ts_us"]:
         assert final[col].tolist() == batch[col].tolist(), col
 
 
@@ -273,6 +271,51 @@ def test_upsert_store_survives_crash_mid_swap(spark):
         batch, ["user_id", "last_event_id"]
     )
     shutil.rmtree(workdir, ignore_errors=True)
+
+
+def test_file_stream_trigger_launches_no_listing_job(spark, tmp_path):
+    """On a local master, prepare() keeps a file-stream trigger over many
+    new files from launching Spark's parallel-listing job (InMemoryFileIndex
+    lists more than parallelPartitionDiscovery.threshold paths, default 32,
+    in a job of its own). Control: with the default threshold the same
+    trigger does launch one, so the job-description check can see it."""
+    from flink_realtime_spark.session import prepare
+
+    threshold = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    src = tmp_path / "src"
+    src.mkdir()
+    for i in range(40):
+        shutil.copy(os.path.join(SF_DIR, "events.parquet"), src / f"f{i:02d}.parquet")
+    store = spark.sparkContext._jsc.sc().statusStore()
+
+    def _scala_list(seq) -> list:
+        return [seq.apply(i) for i in range(seq.size())]
+
+    def listing_jobs(ckpt: str) -> list[str]:
+        seen = {j.jobId() for j in _scala_list(store.jobsList(None))}
+        sdf = file_stream_source(spark, str(src), EVENTS_DDL)
+        q = (
+            sdf.writeStream.format("noop")
+            .option("checkpointLocation", str(tmp_path / ckpt))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+        descs = [
+            j.description().get()
+            for j in _scala_list(store.jobsList(None))
+            if j.jobId() not in seen and j.description().isDefined()
+        ]
+        return [d for d in descs if d.startswith("Listing leaf files")]
+
+    prepare(spark)
+    assert listing_jobs("ckpt_pinned") == []
+    try:
+        spark.conf.set(threshold, "32")
+        assert len(listing_jobs("ckpt_default")) == 1
+    finally:
+        prepare(spark)
 
 
 def test_mv_store_survives_crash_mid_swap(spark, chunked_events_dir, tmp_path):
