@@ -50,8 +50,14 @@ _LOCAL_CONF = {
 
 # (conf, reason) for every pin a host session refused, first refusal only:
 # the engine then runs with the host's value, so a pinned speed-up (or a
-# pinned plan shape) may be missing, and this says which.
+# pinned plan shape) may be missing, and this says which. A refused
+# package shipment (_ship_package) is recorded as spark.submit.pyFiles.
 REFUSED_CONFS: list[tuple[str, str]] = []
+
+
+def _record_refusal(conf: str, e: Exception) -> None:
+    if all(conf != refused for refused, _ in REFUSED_CONFS):
+        REFUSED_CONFS.append((conf, f"{type(e).__name__}: {e}"))
 
 
 def default_parallelism() -> int:
@@ -88,11 +94,13 @@ def _ship_package(spark: SparkSession) -> None:
                 full = os.path.join(root, fn)
                 rel = os.path.relpath(full, os.path.dirname(pkg_dir))
                 zf.write(full, rel)
+    _SHIPPED.add(app_id)  # one attempt per application
     try:
         sc.addPyFile(zip_path)
-        _SHIPPED.add(app_id)
-    except Exception:
-        pass  # already added under this name, or a restricted session
+    except Exception as e:  # a restricted session: workers then import
+        # the package from their own environment, or fail to
+        os.remove(zip_path)
+        _record_refusal("spark.submit.pyFiles", e)
 
 
 def _is_local(spark: SparkSession) -> bool:
@@ -120,8 +128,7 @@ def prepare(spark: SparkSession) -> SparkSession:
         try:
             spark.conf.set(k, v)
         except Exception as e:  # conf locked by the host session
-            if all(k != refused for refused, _ in REFUSED_CONFS):
-                REFUSED_CONFS.append((k, f"{type(e).__name__}: {e}"))
+            _record_refusal(k, e)
     return spark
 
 
@@ -156,139 +163,10 @@ def find_kafka_jars() -> list[str]:
     return sorted(set(paths))
 
 
-# Directories that may carry a vendored pure-Python google.protobuf
-# runtime on machines where pip can't install one (this sandbox: the
-# google-cloud-sdk ships protobuf 6.32 pure-Python). Probed by
-# enable_vendored_protobuf() only when `import google.protobuf` fails.
-_PROTOBUF_VENDOR_DIRS = [
-    os.environ.get("SPARK_GRAFT_PROTOBUF_DIR", ""),
-    "/usr/lib/google-cloud-sdk/platform/google_appengine",
-]
-
-
-# Prior values of the env vars enable_vendored_protobuf mutates, recorded
-# at first mutation so restore_protobuf_env can undo the process-global
-# change once its consumers captured it (ADVICE r4: the mutation must not
-# silently leak into unrelated child processes or relax protobuf's version
-# validation for other libraries in this interpreter).
-_PROTOBUF_ENV_PRIOR: dict[str, str | None] | None = None
-_PROTOBUF_CHECK_VAR = "TEMPORARILY_DISABLE_PROTOBUF_VERSION_CHECK"
-
-
-def restore_protobuf_env() -> None:
-    """Undo enable_vendored_protobuf's env mutation after every consumer
-    that reads it at spawn/import time has captured it: the JVM snapshots
-    the env at launch (Python workers inherit the JVM's copy), and the
-    driver-side TWS gencode is imported eagerly here while the version-
-    check escape hatch is still set, so later driver imports hit the
-    module cache and never re-validate. sys.path keeps the vendor dir —
-    that is interpreter-local and exactly scoped to making
-    google.protobuf importable."""
-    global _PROTOBUF_ENV_PRIOR
-    if _PROTOBUF_ENV_PRIOR is None:
-        return
-    try:
-        import pyspark.sql.streaming.proto.StateMessage_pb2  # noqa: F401
-    except Exception:
-        pass  # gencode validation will then surface at first TWS use
-    for k, v in _PROTOBUF_ENV_PRIOR.items():
-        if v is None:
-            os.environ.pop(k, None)
-        else:
-            os.environ[k] = v
-    _PROTOBUF_ENV_PRIOR = None
-
-
-def enable_vendored_protobuf(keep_env: bool = False) -> bool:
-    """Make transformWithStateInPandas executable where google.protobuf
-    isn't pip-installed, by adopting a vendored pure-Python runtime:
-
-    - appends the vendor dir to sys.path (driver-side import) AND to
-      $PYTHONPATH (so Python WORKERS spawned by a JVM created after this
-      call inherit it — call before SparkSession.builder);
-    - sets protobuf's own official escape hatch
-      TEMPORARILY_DISABLE_PROTOBUF_VERSION_CHECK: pyspark 4.1.2's
-      StateMessage gencode is 6.33 and the vendored runtime 6.32 — one
-      minor version apart, which the validator rejects conservatively;
-      both TWS equivalence tests pass under the override
-      (tests/test_streaming.py::test_tws_form_equivalent_*).
-
-    The env mutation is SCOPED (ADVICE r4): by default it is rolled back
-    via restore_protobuf_env before returning (the driver-side gencode is
-    imported under the escape hatch first, so TWS keeps working).
-    ``keep_env=True`` defers the rollback — get_spark uses it so the env
-    stays mutated across the JVM launch, then restores right after.
-
-    Test-scale shim ONLY: production clusters pip-install protobuf and
-    never reach this path. Returns True when google.protobuf is
-    importable (already or after adoption)."""
-    global _PROTOBUF_ENV_PRIOR
-    import importlib
-    import sys
-
-    try:
-        import google.protobuf
-
-        if keep_env:
-            # A prior scoped call can leave the module importable (vendor
-            # dir still on sys.path) while its env rollback removed the
-            # dir from $PYTHONPATH — a FRESH JVM launched now would spawn
-            # workers without the vendored runtime. Re-apply the mutation
-            # when the module resolves from a vendor dir, re-recording
-            # priors so the post-launch restore stays symmetric.
-            mod_root = os.path.dirname(
-                os.path.dirname(os.path.dirname(google.protobuf.__file__))
-            )
-            if mod_root in _PROTOBUF_VENDOR_DIRS:
-                if _PROTOBUF_ENV_PRIOR is None:
-                    _PROTOBUF_ENV_PRIOR = {
-                        "PYTHONPATH": os.environ.get("PYTHONPATH"),
-                        _PROTOBUF_CHECK_VAR: os.environ.get(_PROTOBUF_CHECK_VAR),
-                    }
-                pp = os.environ.get("PYTHONPATH", "")
-                if mod_root not in pp.split(os.pathsep):
-                    os.environ["PYTHONPATH"] = (
-                        (pp + os.pathsep + mod_root) if pp else mod_root
-                    )
-                os.environ.setdefault(_PROTOBUF_CHECK_VAR, "true")
-        else:
-            restore_protobuf_env()
-        return True
-    except ImportError:
-        pass
-    for d in _PROTOBUF_VENDOR_DIRS:
-        if not d or not os.path.isdir(os.path.join(d, "google", "protobuf")):
-            continue
-        if d not in sys.path:
-            sys.path.append(d)
-        if _PROTOBUF_ENV_PRIOR is None:
-            _PROTOBUF_ENV_PRIOR = {
-                "PYTHONPATH": os.environ.get("PYTHONPATH"),
-                _PROTOBUF_CHECK_VAR: os.environ.get(_PROTOBUF_CHECK_VAR),
-            }
-        pp = os.environ.get("PYTHONPATH", "")
-        if d not in pp.split(os.pathsep):
-            os.environ["PYTHONPATH"] = (pp + os.pathsep + d) if pp else d
-        os.environ.setdefault(_PROTOBUF_CHECK_VAR, "true")
-        importlib.invalidate_caches()
-        try:
-            import google.protobuf  # noqa: F401
-
-            if not keep_env:
-                restore_protobuf_env()
-            return True
-        except ImportError:
-            continue
-    return False
-
-
 def get_spark(app_name: str = "flink-realtime-spark") -> SparkSession:
     """Local session for tests/bench. On a real cluster, submit with the
     same confs via spark-submit; the engine code itself is deploy-agnostic."""
     cpus = default_parallelism()
-    # Before the JVM launch: workers inherit $PYTHONPATH from the JVM's
-    # env snapshot; the mutation is rolled back right after getOrCreate.
-    enable_vendored_protobuf(keep_env=True)
     kafka_jars = find_kafka_jars()
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
@@ -307,6 +185,4 @@ def get_spark(app_name: str = "flink-realtime-spark") -> SparkSession:
         builder = builder.config("spark.jars", ",".join(kafka_jars))
     for k, v in _RUNTIME_CONF.items():
         builder = builder.config(k, v)
-    spark = builder.getOrCreate()
-    restore_protobuf_env()  # JVM captured the env; undo the global mutation
-    return prepare(spark)
+    return prepare(builder.getOrCreate())

@@ -8,8 +8,9 @@ changelog compaction, streaming dedup with TTL, CEP pattern detection
 Spark-first split, per the engine's normative rule (SURVEY.md §3.3): every
 streaming operator has a bounded batch analog with identical semantics —
 the batch analog is what the DuckDB oracle hash-checks; the streaming form
-(transformWithStateInPandas processors below, dropDuplicatesWithinWatermark)
-is exercised by tests/test_streaming.py equivalence replays.
+(applyInPandasWithState state functions below via apply_with_state,
+dropDuplicatesWithinWatermark) is exercised by tests/test_streaming.py
+equivalence replays.
 
 Scale notes (100 TB): state lives in the executor-local RocksDB store keyed
 by shuffle partition; state size is bounded by (keys × state row), not by
@@ -92,8 +93,8 @@ def cdc_latest_image(spark: SparkSession, sf_dir: str) -> DataFrame:
 def state_new_visitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The canonical DWD per-key state machine (Flink KeyedProcessFunction
     'new visitor' flag): mark each user's first-ever event. Batch analog =
-    row_number()=1; streaming form = NewVisitorProcessor
-    (transformWithStateInPandas + ValueState), equivalence-tested."""
+    row_number()=1; streaming form = new_visitor_state_fn via
+    apply_with_state (applyInPandasWithState), equivalence-tested."""
     wh = Warehouse(spark, sf_dir)
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     return wh.events.select(
@@ -304,13 +305,10 @@ def cep_funnel_any(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # Streaming forms: arbitrary keyed state (the KeyedProcessFunction analog).
 #
-# Spark 4 offers two APIs. transformWithStateInPandas (value/map/list state,
-# timers, TTL) is the full-featured target on clusters, but its Python
-# driver worker requires google.protobuf, absent in this container — so the
-# engine's portable surface is applyInPandasWithState (Arrow-based
-# GroupState), which covers the operators below completely. The
-# transform_with_state wrapper remains the forward path and is used
-# verbatim where protobuf exists.
+# One API: applyInPandasWithState (Arrow-based GroupState, event-time
+# timeouts via GroupStateTimeout) through apply_with_state. It needs no
+# protobuf on driver or workers and covers every operator below; SCALE.md
+# §TWS-vs-portable records why it is the only path.
 # --------------------------------------------------------------------------
 
 
@@ -867,355 +865,6 @@ def apply_with_state(
         outputMode=output_mode,
         timeoutConf=conf,
     )
-
-
-def tws_available() -> bool:
-    """Capability gate for transformWithStateInPandas: its Python state
-    server speaks protobuf to the JVM, so the API constructs fine but
-    EXECUTION needs google.protobuf. Detected at runtime — never assumed
-    either way; tests skip-or-run per stateful op on this flag, and
-    clusters with protobuf get the full timers/TTL path below.
-
-    Where no pip-installed protobuf exists, session.get_spark adopts a
-    vendored pure-Python runtime BEFORE the JVM starts (workers inherit
-    $PYTHONPATH at JVM launch) — with it, both TWS processor forms
-    execute and match their applyInPandasWithState twins in this very
-    sandbox (round 4; previously a permanent skip). CAVEAT: on a session
-    whose JVM started before the adoption (e.g. built directly by an
-    external driver), the driver import resolves but workers may lack
-    the path — set PYTHONPATH in the launching environment there, or use
-    apply_with_state, which needs no protobuf anywhere."""
-    from flink_realtime_spark.session import enable_vendored_protobuf
-
-    return enable_vendored_protobuf()
-
-
-def transform_with_state(
-    sdf: DataFrame,
-    key: str,
-    processor,
-    output_schema: str,
-    output_mode: str = "Append",
-    time_mode: str = "None",
-) -> DataFrame:
-    """Wrapper for groupBy(key).transformWithStateInPandas — the
-    full-featured (timers/TTL/map/list state) path on clusters where
-    google.protobuf is available (``tws_available``). ``time_mode``
-    "EventTime" enables registerTimer/handleExpiredTimer driven by the
-    watermark."""
-    if not tws_available():
-        raise RuntimeError(
-            "transformWithStateInPandas needs google.protobuf at execution "
-            "time (absent here); use apply_with_state — the equivalent "
-            "applyInPandasWithState forms cover every registered stateful op"
-        )
-    return sdf.groupBy(key).transformWithStateInPandas(
-        statefulProcessor=processor,
-        outputStructType=output_schema,
-        outputMode=output_mode,
-        timeMode=time_mode,
-    )
-
-
-# --- transformWithStateInPandas processor forms -------------------------
-# The TWS twins of latest_image_state_fn / timeout_alert_state_fn: same
-# semantics on the Spark 4 arbitrary-state API (ValueState + named event
-# timers with TTL support) instead of GroupState. Classes construct
-# without protobuf (import-safe); execution is gated by tws_available and
-# equivalence-tested against the applyInPandasWithState forms in
-# tests/test_streaming.py::test_tws_* (skip-or-pass per op, never silent).
-#
-# Verification debt RESOLVED (round 4): google.protobuf has no pip wheel
-# here, but session.enable_vendored_protobuf adopts the google-cloud-sdk's
-# vendored pure-Python runtime (6.32) before the JVM starts, and both
-# equivalence tests now EXECUTE and pass in this sandbox — registerTimer's
-# millisecond units, the TimerValues accessors and the ValueState tuple
-# codec are exercised, not just constructed. The only remaining gap vs a
-# pip-installed cluster is protobuf minor-version skew (gencode 6.33 vs
-# runtime 6.32, run under protobuf's own official version-check override).
-
-from pyspark.sql.streaming.stateful_processor import (  # noqa: E402
-    StatefulProcessor,
-    StatefulProcessorHandle,
-)
-
-
-class TwsLatestImageProcessor(StatefulProcessor):
-    """cdc_latest_image on TWS: ValueState holds the running latest
-    (ts_us, event_id, type, value) per key; one refreshed image emitted
-    per micro-batch — identical update-stream contract to
-    latest_image_state_fn."""
-
-    OUTPUT_SCHEMA = (
-        "user_id LONG, last_event_id LONG, last_type STRING, "
-        "last_value DOUBLE, last_ts_us LONG"
-    )
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self._latest = handle.getValueState(
-            "latest", "ts_us LONG, event_id LONG, event_type STRING, value DOUBLE"
-        )
-
-    def handleInputRows(self, key, rows, timerValues):
-        import pandas as pd
-
-        best = tuple(self._latest.get()) if self._latest.exists() else None
-        user_id = key[0]
-        for pdf in rows:
-            for r in pdf.itertuples(index=False):
-                cand = (
-                    int(r.ts.value // 1000),
-                    int(r.event_id),
-                    str(r.event_type),
-                    float(r.value),
-                )
-                if best is None or (cand[0], cand[1]) > (best[0], best[1]):
-                    best = cand
-        if best is not None:
-            self._latest.update(best)
-            yield pd.DataFrame(
-                {
-                    "user_id": pd.Series([user_id], dtype="int64"),
-                    "last_event_id": pd.Series([best[1]], dtype="int64"),
-                    "last_type": [best[2]],
-                    "last_value": pd.Series([best[3]], dtype="float64"),
-                    "last_ts_us": pd.Series([best[0]], dtype="int64"),
-                }
-            )
-
-    def close(self) -> None:
-        pass
-
-
-class TwsTimeoutAlertProcessor(StatefulProcessor):
-    """state_timeout_alert on TWS: pending clicks in ValueState, a REAL
-    registered event-time timer at the earliest outstanding deadline
-    (timeout_alert_state_fn approximates this with GroupState's single
-    setTimeoutTimestamp); purchases clear the clicks they satisfy; expired
-    clicks emit from handleExpiredTimer, plus inline when a batch advances
-    the watermark past older deadlines."""
-
-    OUTPUT_SCHEMA = "user_id LONG, click_id LONG, click_ts_us LONG"
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self._pend = handle.getValueState(
-            "pending", "pend_ts ARRAY<LONG>, pend_id ARRAY<LONG>"
-        )
-        self._handle = handle
-
-    def _load(self):
-        if self._pend.exists():
-            ts_l, id_l = self._pend.get()
-            return list(ts_l), list(id_l)
-        return [], []
-
-    def _emit_and_store(self, user_id, pend_ts, pend_id, wm_us):
-        import pandas as pd
-
-        expired = [
-            (ct, ci)
-            for ct, ci in zip(pend_ts, pend_id)
-            if ct + _TIMEOUT_US < wm_us
-        ]
-        live = [
-            (ct, ci)
-            for ct, ci in zip(pend_ts, pend_id)
-            if ct + _TIMEOUT_US >= wm_us
-        ]
-        if live:
-            ts_l, id_l = [list(x) for x in zip(*live)]
-            self._pend.update((ts_l, id_l))
-            self._handle.registerTimer(min(ts_l) // 1000 + _TIMEOUT_US // 1000)
-        else:
-            self._pend.clear()
-        if expired:
-            yield pd.DataFrame(
-                {
-                    "user_id": pd.Series(
-                        [user_id] * len(expired), dtype="int64"
-                    ),
-                    "click_id": pd.Series(
-                        [ci for _, ci in expired], dtype="int64"
-                    ),
-                    "click_ts_us": pd.Series(
-                        [ct for ct, _ in expired], dtype="int64"
-                    ),
-                }
-            )
-
-    def handleInputRows(self, key, rows, timerValues):
-        pend_ts, pend_id = self._load()
-        for pdf in rows:
-            pdf = pdf.sort_values(["ts", "event_id"])
-            for r in pdf.itertuples(index=False):
-                t_us = int(r.ts.value // 1000)
-                if r.event_type == "click":
-                    pend_ts.append(t_us)
-                    pend_id.append(int(r.event_id))
-                elif r.event_type == "purchase":
-                    keep = [
-                        (ct, ci)
-                        for ct, ci in zip(pend_ts, pend_id)
-                        if not (ct < t_us <= ct + _TIMEOUT_US)
-                    ]
-                    pend_ts, pend_id = (
-                        [list(x) for x in zip(*keep)] if keep else ([], [])
-                    )
-        wm_us = timerValues.getCurrentWatermarkInMs() * 1000
-        yield from self._emit_and_store(key[0], pend_ts, pend_id, wm_us)
-
-    def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-        self._handle.deleteTimer(expiredTimerInfo.getExpiryTimeInMs())
-        pend_ts, pend_id = self._load()
-        wm_us = timerValues.getCurrentWatermarkInMs() * 1000
-        yield from self._emit_and_store(key[0], pend_ts, pend_id, wm_us)
-
-    def close(self) -> None:
-        pass
-
-
-class TwsRunningSumProcessor(StatefulProcessor):
-    """running_sum_state_fn on TWS: the per-row streaming OVER aggregate
-    on the Spark 4 API — ValueState carries (n, sum in 1e-4 units), each
-    input row emits enriched with its running count/total. Same exact
-    integer-unit accumulation discipline as the applyInPandasWithState
-    twin; equivalence-tested in tests/test_streaming.py."""
-
-    OUTPUT_SCHEMA = "event_id LONG, user_id LONG, run_n LONG, run_value DOUBLE"
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self._acc = handle.getValueState("acc", "n LONG, sum_c4 LONG")
-
-    def handleInputRows(self, key, rows, timerValues):
-        import decimal
-
-        import pandas as pd
-
-        _Q = decimal.Decimal("0.0001")
-        n, sum_c4 = (tuple(self._acc.get()) if self._acc.exists() else (0, 0))
-        user_id = key[0]
-        for pdf in rows:
-            pdf = pdf.sort_values("event_id")
-            out_n, out_v = [], []
-            for r in pdf.itertuples(index=False):
-                n += 1
-                v = float(r.value)
-                if v == v:  # SQL SUM: NULL (NaN here) doesn't contribute
-                    sum_c4 += int(
-                        decimal.Decimal(repr(v)).quantize(
-                            _Q, rounding=decimal.ROUND_HALF_UP
-                        ).scaleb(4)
-                    )
-                out_n.append(n)
-                out_v.append(sum_c4 / 1e4)
-            if len(pdf):
-                yield pd.DataFrame(
-                    {
-                        "event_id": pdf["event_id"].astype("int64").values,
-                        "user_id": pd.Series(
-                            [user_id] * len(pdf), dtype="int64"
-                        ),
-                        "run_n": pd.Series(out_n, dtype="int64"),
-                        "run_value": pd.Series(out_v, dtype="float64"),
-                    }
-                )
-        self._acc.update((n, sum_c4))
-
-    def close(self) -> None:
-        pass
-
-
-class TwsTypeCountsProcessor(StatefulProcessor):
-    """Per-user event-type counts on TWS MapState — exercises the
-    MapState codec (containsKey/getValue/updateValue/iterator), the one
-    state primitive the ValueState processors above don't touch. Emits
-    the full refreshed (user, type, n) map each micro-batch; consumers
-    take the last emission per (user, type) — the update-stream contract.
-    Equivalence vs the batch groupBy count is tested in
-    tests/test_streaming.py."""
-
-    OUTPUT_SCHEMA = "user_id LONG, event_type STRING, n LONG"
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self._counts = handle.getMapState("counts", "t STRING", "n LONG")
-
-    def handleInputRows(self, key, rows, timerValues):
-        import pandas as pd
-
-        user_id = key[0]
-        touched = False
-        for pdf in rows:
-            for r in pdf.itertuples(index=False):
-                touched = True
-                t = (str(r.event_type),)
-                cur = (
-                    self._counts.getValue(t)[0]
-                    if self._counts.containsKey(t)
-                    else 0
-                )
-                self._counts.updateValue(t, (cur + 1,))
-        if touched:
-            items = [
-                (k[0], v[0]) for k, v in self._counts.iterator()
-            ]
-            items.sort()
-            yield pd.DataFrame(
-                {
-                    "user_id": pd.Series(
-                        [user_id] * len(items), dtype="int64"
-                    ),
-                    "event_type": [t for t, _ in items],
-                    "n": pd.Series([n for _, n in items], dtype="int64"),
-                }
-            )
-
-    def close(self) -> None:
-        pass
-
-
-class TwsTtlNewVisitorProcessor(StatefulProcessor):
-    """State-TTL demonstration — the Flink ``StateTtlConfig`` analog
-    (processing-time TTL, OnCreateAndWrite refresh, expired-value
-    invisibility), on TWS's native ``ttlDurationMs``. Two ValueStates
-    carry the SAME per-key "seen" flag, one with a TTL and one without;
-    each batch emits whether the key looked NEW under each. After a
-    pause longer than the TTL (across a checkpoint restart — the
-    processing-time clock keeps running), the TTL'd state has expired
-    (ttl_new flips back to 1) while the permanent state still remembers
-    (perm_new stays 0): exactly the Flink TTL contract, verified by
-    tests/test_streaming.py::test_tws_state_ttl_expires_across_restart."""
-
-    OUTPUT_SCHEMA = "user_id LONG, ttl_new LONG, perm_new LONG"
-
-    def __init__(self, ttl_ms: int = 1500):
-        self._ttl_ms = ttl_ms
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self._seen_ttl = handle.getValueState(
-            "seen_ttl", "seen INT", ttlDurationMs=self._ttl_ms
-        )
-        self._seen_perm = handle.getValueState("seen_perm", "seen INT")
-
-    def handleInputRows(self, key, rows, timerValues):
-        import pandas as pd
-
-        saw_any = any(len(pdf) for pdf in rows)
-        if not saw_any:
-            return
-        ttl_new = 0 if self._seen_ttl.exists() else 1
-        perm_new = 0 if self._seen_perm.exists() else 1
-        self._seen_ttl.update((1,))
-        self._seen_perm.update((1,))
-        yield pd.DataFrame(
-            {
-                "user_id": pd.Series([key[0]], dtype="int64"),
-                "ttl_new": pd.Series([ttl_new], dtype="int64"),
-                "perm_new": pd.Series([perm_new], dtype="int64"),
-            }
-        )
-
-    def close(self) -> None:
-        pass
 
 
 @query(

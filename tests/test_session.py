@@ -26,3 +26,17 @@ def test_prepare_records_refused_conf(spark, monkeypatch):
     assert spark.conf.get(
         "spark.sql.sources.parallelPartitionDiscovery.threshold"
     ) == str(2**31 - 1)
+
+
+def test_ship_package_records_add_py_file_failure(spark, monkeypatch):
+    def refuse(path):
+        raise RuntimeError("addPyFile disabled")
+
+    monkeypatch.setattr(spark.sparkContext, "addPyFile", refuse)
+    monkeypatch.setattr(session, "_SHIPPED", set())
+    monkeypatch.setattr(session, "REFUSED_CONFS", [])
+    session.prepare(spark)
+    session.prepare(spark)
+    assert session.REFUSED_CONFS == [
+        ("spark.submit.pyFiles", "RuntimeError: addPyFile disabled")
+    ]

@@ -7,7 +7,7 @@ asserting the result equals the batch analog of the same expression:
 - windowed aggregation (complete mode → exact equality; append mode →
   equality on watermark-closed windows),
 - dropDuplicatesWithinWatermark vs batch DISTINCT,
-- transformWithStateInPandas processors (new-visitor flag, CDC latest
+- applyInPandasWithState state functions (new-visitor flag, CDC latest
   image) vs their window-function batch analogs, including a multi-
   micro-batch replay that forces state to carry across batches,
 - the foreachBatch parquet upsert store merged over two passes.
@@ -153,7 +153,7 @@ def test_stream_dedup_within_watermark(spark):
     )
 
 
-def test_transform_with_state_new_visitor(spark):
+def test_apply_with_state_new_visitor(spark):
     spark.conf.set("spark.sql.streaming.stateStore.providerClass", ROCKSDB)
     sdf = events_stream(spark, SF_DIR).select(
         "event_id", "user_id", "ts", "event_type", "value"
@@ -166,7 +166,7 @@ def test_transform_with_state_new_visitor(spark):
     )
 
 
-def test_transform_with_state_latest_image_multibatch(spark, chunked_events_dir):
+def test_apply_with_state_latest_image_multibatch(spark, chunked_events_dir):
     spark.conf.set("spark.sql.streaming.stateStore.providerClass", ROCKSDB)
     sdf = file_stream_source(
         spark, chunked_events_dir, EVENTS_DDL, max_files_per_trigger=1
@@ -542,128 +542,6 @@ def test_stream_slide_complete_equals_batch(spark):
         .select(F.col("w.start").alias("ws"), "n")
     )
     assert _rows(streamed, ["ws", "n"]) == _rows(batch, ["ws", "n"])
-
-
-def test_vendored_protobuf_keep_env_reapplies_after_scoped_call():
-    """ADVICE r5 regression (session.py): after a SCOPED
-    enable_vendored_protobuf call (env mutated, then rolled back; vendor
-    dir retained on sys.path), a later keep_env=True call must RE-apply
-    the $PYTHONPATH/version-check mutation even though google.protobuf is
-    already importable — a fresh JVM launched at that point snapshots the
-    env, and without the re-apply its Python workers lack the vendored
-    runtime. Runs in a subprocess: the scenario needs an interpreter
-    where protobuf is NOT pip-installed and not yet vendored-in."""
-    import subprocess
-    import sys
-
-    script = r"""
-import os, sys
-from flink_realtime_spark import session as S
-try:
-    import google.protobuf
-    print("SKIP: protobuf pip-installed")
-    sys.exit(0)
-except ImportError:
-    pass
-pp_orig = os.environ.get("PYTHONPATH")
-if not S.enable_vendored_protobuf(keep_env=False):
-    print("SKIP: no vendor dir")
-    sys.exit(0)
-assert os.environ.get("PYTHONPATH") == pp_orig, "scoped call must roll back"
-import google.protobuf
-root = os.path.dirname(os.path.dirname(os.path.dirname(google.protobuf.__file__)))
-assert root in S._PROTOBUF_VENDOR_DIRS
-assert S.enable_vendored_protobuf(keep_env=True)
-assert root in (os.environ.get("PYTHONPATH") or "").split(os.pathsep), (
-    "keep_env=True must re-apply PYTHONPATH on the already-importable path")
-assert os.environ.get(S._PROTOBUF_CHECK_VAR) == "true"
-S.restore_protobuf_env()
-assert os.environ.get("PYTHONPATH") == pp_orig, "restore must be symmetric"
-print("OK")
-"""
-    proc = subprocess.run(
-        [sys.executable, "-c", script],
-        capture_output=True,
-        text=True,
-        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        timeout=120,
-    )
-    assert proc.returncode == 0, proc.stderr
-    if proc.stdout.startswith("SKIP"):
-        pytest.skip(proc.stdout.strip())
-    assert "OK" in proc.stdout
-
-
-@pytest.mark.parametrize("op", ["cdc_latest_image", "state_timeout_alert"])
-def test_tws_form_equivalent_when_protobuf_present(
-    spark, chunked_events_dir, op
-):
-    """Capability-gated transformWithStateInPandas equivalence: when
-    google.protobuf is importable, each stateful op's TWS processor form
-    must emit the same final state as its applyInPandasWithState form;
-    when it is not, this records an explicit per-op skip (never silent) —
-    the applyInPandasWithState equivalence tests still cover the op's
-    semantics either way."""
-    from flink_realtime_spark.streaming.stateful import (
-        TwsLatestImageProcessor,
-        TwsTimeoutAlertProcessor,
-        apply_with_state,
-        latest_image_state_fn,
-        timeout_alert_state_fn,
-        transform_with_state,
-        tws_available,
-    )
-
-    if not tws_available():
-        pytest.skip(
-            f"transformWithStateInPandas form of {op} gated off: "
-            "google.protobuf is not importable in this container (the TWS "
-            "Python state server requires it; CLAUDE.md invariant). The "
-            "applyInPandasWithState form is the one exercised and "
-            "equivalence-tested here."
-        )
-
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass", ROCKSDB)
-    if op == "cdc_latest_image":
-        sdf = file_stream_source(
-            spark, chunked_events_dir, EVENTS_DDL, max_files_per_trigger=1
-        ).select("user_id", "event_id", "ts", "event_type", "value")
-        tws = transform_with_state(
-            sdf,
-            "user_id",
-            TwsLatestImageProcessor(),
-            TwsLatestImageProcessor.OUTPUT_SCHEMA,
-        )
-        aps = apply_with_state(sdf, "user_id", latest_image_state_fn)
-        cols = ["user_id", "last_event_id", "last_type", "last_value", "last_ts_us"]
-    else:
-        sdf = (
-            file_stream_source(
-                spark, chunked_events_dir, EVENTS_DDL, max_files_per_trigger=1
-            )
-            .withWatermark("ts", "0 seconds")
-            .select("user_id", "event_id", "ts", "event_type")
-        )
-        tws = transform_with_state(
-            sdf,
-            "user_id",
-            TwsTimeoutAlertProcessor(),
-            TwsTimeoutAlertProcessor.OUTPUT_SCHEMA,
-            time_mode="EventTime",
-        )
-        aps = apply_with_state(
-            sdf, "user_id", timeout_alert_state_fn, timeout="event"
-        )
-        cols = ["user_id", "click_id", "click_ts_us"]
-    got_tws = run_available_now(tws, "append").toPandas()
-    got_aps = run_available_now(aps, "append").toPandas()
-    if op == "cdc_latest_image":
-        got_tws = got_tws.groupby("user_id", sort=True).last().reset_index()
-        got_aps = got_aps.groupby("user_id", sort=True).last().reset_index()
-    for df in (got_tws, got_aps):
-        df.sort_values(cols, inplace=True)
-        df.reset_index(drop=True, inplace=True)
-    assert got_tws[cols].values.tolist() == got_aps[cols].values.tolist()
 
 
 def _kafka_connector_available(spark) -> bool:
@@ -2094,166 +1972,6 @@ def test_stream_per_row_running_sum(spark, chunked_events_dir, tmp_path):
     )
     cols = ["event_id", "user_id", "run_n", "run_value"]
     assert _rows(served, cols) == _rows(batch, cols)
-
-
-def test_tws_state_ttl_expires_mid_stream(spark, tmp_path):
-    """Flink StateTtlConfig parity, now EXERCISED (round 4; previously
-    'approximated, not exercised'): a TWS ValueState declared with
-    ttlDurationMs must become invisible once the TTL elapses in
-    processing time, while an identical state without TTL survives. One
-    continuous query over a file stream; the same keys arrive twice with
-    a sleep longer than the TTL in between: the second arrival must see
-    ttl_new=1 (expired) and perm_new=0 (remembered) for every key.
-    (availableNow/processAllAvailable can't be used here: ProcessingTime
-    mode schedules perpetual state-cleanup batches, so the test polls
-    the sink and stops the query explicitly.)"""
-    import time as _time
-
-    from flink_realtime_spark.streaming.stateful import (
-        TwsTtlNewVisitorProcessor,
-        transform_with_state,
-        tws_available,
-    )
-
-    if not tws_available():
-        pytest.skip(
-            "transformWithStateInPandas gated off: google.protobuf not "
-            "importable and no vendored runtime found"
-        )
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass", ROCKSDB)
-
-    stream_dir = tmp_path / "in"
-    stream_dir.mkdir()
-    ev = load_table(spark, SF_DIR, "events").select(
-        "event_id", "ts", "user_id", "event_type", "value"
-    )
-    users = [r.user_id for r in ev.select("user_id").distinct().limit(20).collect()]
-    batch = ev.filter(F.col("user_id").isin(users))
-
-    def drop_file(tag: str):
-        batch.coalesce(1).write.mode("overwrite").parquet(
-            str(tmp_path / f"stage_{tag}")
-        )
-        src = [
-            f
-            for f in os.listdir(tmp_path / f"stage_{tag}")
-            if f.endswith(".parquet")
-        ][0]
-        os.rename(
-            tmp_path / f"stage_{tag}" / src, stream_dir / f"{tag}.parquet"
-        )
-
-    def wait_rows(n_min, timeout_s=90):
-        t0 = _time.time()
-        while _time.time() - t0 < timeout_s:
-            try:
-                if spark.table("tws_ttl").count() >= n_min:
-                    return True
-            except Exception:  # noqa: BLE001 — table not registered yet
-                pass
-            _time.sleep(0.5)
-        return False
-
-    sdf = file_stream_source(spark, str(stream_dir), EVENTS_DDL)
-    out = transform_with_state(
-        sdf,
-        "user_id",
-        TwsTtlNewVisitorProcessor(ttl_ms=1500),
-        TwsTtlNewVisitorProcessor.OUTPUT_SCHEMA,
-        time_mode="ProcessingTime",  # TTL requires the proc-time clock
-    )
-    q = (
-        out.writeStream.format("memory")
-        .queryName("tws_ttl")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
-    )
-    try:
-        drop_file("a")
-        assert wait_rows(len(users)), "first arrivals never emitted"
-        _time.sleep(3.5)  # > ttl_ms: TTL'd state expires, permanent survives
-        drop_file("b")
-        assert wait_rows(2 * len(users)), "second arrivals never emitted"
-    finally:
-        q.stop()
-        q.awaitTermination()
-    emitted = {}
-    for r in spark.table("tws_ttl").collect():
-        emitted.setdefault(r.user_id, []).append((r.ttl_new, r.perm_new))
-    assert set(emitted) == set(users)
-    for uid, pair_list in emitted.items():
-        assert sorted(pair_list) == [(1, 0), (1, 1)], (uid, pair_list)
-
-
-def test_tws_running_sum_matches_apply_in_pandas(spark, chunked_events_dir):
-    """The TWS (ValueState) form of the per-row streaming OVER aggregate
-    must emit exactly what the applyInPandasWithState form emits over the
-    same 3-micro-batch replay — same rows, same exact integer-unit
-    running totals."""
-    from flink_realtime_spark.streaming.stateful import (
-        TwsRunningSumProcessor,
-        apply_with_state,
-        running_sum_state_fn,
-        transform_with_state,
-        tws_available,
-    )
-
-    if not tws_available():
-        pytest.skip("google.protobuf not importable, no vendored runtime")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass", ROCKSDB)
-
-    def src():
-        return file_stream_source(
-            spark, chunked_events_dir, EVENTS_DDL, max_files_per_trigger=1
-        ).select("user_id", "event_id", "value")
-
-    tws = transform_with_state(
-        src(), "user_id", TwsRunningSumProcessor(),
-        TwsRunningSumProcessor.OUTPUT_SCHEMA,
-    )
-    aps = apply_with_state(src(), "user_id", running_sum_state_fn)
-    cols = ["event_id", "user_id", "run_n", "run_value"]
-    got_tws = _rows(run_available_now(tws, "append"), cols)
-    got_aps = _rows(run_available_now(aps, "append"), cols)
-    assert got_tws == got_aps and len(got_tws) > 0
-
-
-def test_tws_map_state_type_counts_match_batch(spark, chunked_events_dir):
-    """MapState codec end-to-end: per-user event-type counts maintained
-    in TWS MapState across 3 micro-batches; the LAST emission per
-    (user, type) must equal the batch groupBy count over the same
-    events."""
-    from flink_realtime_spark.streaming.stateful import (
-        TwsTypeCountsProcessor,
-        transform_with_state,
-        tws_available,
-    )
-
-    if not tws_available():
-        pytest.skip("google.protobuf not importable, no vendored runtime")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass", ROCKSDB)
-
-    sdf = file_stream_source(
-        spark, chunked_events_dir, EVENTS_DDL, max_files_per_trigger=1
-    ).select("user_id", "event_type")
-    out = transform_with_state(
-        sdf, "user_id", TwsTypeCountsProcessor(),
-        TwsTypeCountsProcessor.OUTPUT_SCHEMA,
-    )
-    emitted = run_available_now(out, "append").toPandas()
-    # update-stream: last emission per (user, type) wins
-    final = {}
-    for r in emitted.itertuples(index=False):
-        final[(r.user_id, r.event_type)] = r.n
-    batch = {
-        (r.user_id, r.event_type): r.n
-        for r in load_table(spark, SF_DIR, "events")
-        .groupBy("user_id", "event_type")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
-    assert final == batch
 
 
 def test_state_reader_matches_query_state(spark, chunked_events_dir, tmp_path):

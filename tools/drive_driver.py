@@ -15,6 +15,8 @@ from __future__ import annotations
 
 import hashlib
 import math
+import os
+import re
 import sys
 import time
 
@@ -299,8 +301,21 @@ def frame_hash(cols, rows):
     return h.hexdigest()
 
 
+def oracle_mem_limit() -> str:
+    """DuckDB memory_limit for the oracle connections:
+    $SPARK_GRAFT_ORACLE_MEM (default 24GB), checked before it is spliced
+    into a SET statement."""
+    v = os.environ.get("SPARK_GRAFT_ORACLE_MEM", "24GB")
+    if not re.fullmatch(r"[0-9]+(\.[0-9]+)?\s*(KB|MB|GB|TB)", v):
+        raise ValueError(
+            f"SPARK_GRAFT_ORACLE_MEM={v!r}: expected a size such as 24GB"
+        )
+    return v
+
+
 def main() -> int:
     global SF
+    oracle_mem = oracle_mem_limit()
     args = sys.argv[1:]
     master, shuffle, mem = "local[32]", None, None
     only = []
@@ -366,7 +381,6 @@ def main() -> int:
     print(f"entry() smoke: {n} rows OK", flush=True)
 
     qs, oracles = e.queries(), e.oracle_sql()
-    import os
 
     def fresh_con():
         # A FRESH connection per oracle query (r11 find): DuckDB 1.0's
@@ -386,10 +400,7 @@ def main() -> int:
         # out-spill the DISK instead (r12: two_stage's dup10 oracle
         # filled 80 GB of /tmp/duckdb_spill) — override upward on a
         # big-RAM box so they spill less.
-        c.execute(
-            "SET memory_limit='%s'"
-            % os.environ.get("SPARK_GRAFT_ORACLE_MEM", "24GB")
-        )
+        c.execute(f"SET memory_limit='{oracle_mem}'")
         os.makedirs("/tmp/duckdb_spill", exist_ok=True)
         c.execute("SET temp_directory='/tmp/duckdb_spill'")
         for t in TABLES:

@@ -14,14 +14,9 @@ Usage: python tools/stream_bench.py [k]   (events replicated k×, default 10)
           operator family's events/s instead of the JVM-only topology)
        python tools/stream_bench.py --perrow [k]
          (per-row-emission running sum on applyInPandasWithState)
-       python tools/stream_bench.py --tws [k] / --tws-perrow [k]
-         (the SAME two topologies through transformWithStateInPandas —
-          ValueState processors — so the portable-vs-TWS throughput delta
-          is measured, not assumed; VERDICT r4 #3)
        python tools/stream_bench.py --batch-overhead [k]
-         (single-batch vs one-batch-per-file replay per API → the wall
-          cost of one extra micro-batch: commit + checkpoint + TWS
-          state-server handshake)
+         (single-batch vs one-batch-per-file replay → the wall cost of
+          one extra micro-batch: state-store commit + checkpoint)
 """
 
 from __future__ import annotations
@@ -185,13 +180,12 @@ def perrow_main() -> None:
 
 
 def batch_overhead_main() -> None:
-    """Per-BATCH overhead of each keyed-state API: replay the same ×k
-    events through the latest-image topology twice per API — once as a
-    single availableNow batch, once split into one micro-batch per input
-    file (maxFilesPerTrigger=1) — and report (multi-batch wall − single-
-    batch wall) / extra batches. That difference is what one extra
-    micro-batch costs: state-store commit + checkpoint + (for TWS) the
-    state-server handshake, independent of row volume."""
+    """Per-BATCH overhead of the keyed-state path: replay the same ×k
+    events through the latest-image topology twice — once as a single
+    availableNow batch, once split into one micro-batch per input file
+    (maxFilesPerTrigger=1) — and report (multi-batch wall − single-batch
+    wall) / extra batches. That difference is what one extra micro-batch
+    costs: state-store commit + checkpoint, independent of row volume."""
     k = int(sys.argv[1]) if len(sys.argv) > 1 else 10
     spark = get_spark("stream-bench-overhead")
     spark.conf.set(
@@ -200,11 +194,8 @@ def batch_overhead_main() -> None:
         "RocksDBStateStoreProvider",
     )
     from flink_realtime_spark.streaming.stateful import (
-        TwsLatestImageProcessor,
         apply_with_state,
         latest_image_state_fn,
-        transform_with_state,
-        tws_available,
     )
     from tools.scale_probe import build
 
@@ -238,95 +229,22 @@ def batch_overhead_main() -> None:
             shutil.rmtree(tmp)
         open(os.path.join(staging, "_OK"), "w").close()
 
-    def source(mft: int | None):
-        return file_stream_source(
+    def run(mft: int | None) -> float:
+        sdf = file_stream_source(
             spark, staging, EVENTS_DDL, max_files_per_trigger=mft
-        )
-
-    def run(api: str, mft: int | None) -> float:
-        sdf = source(mft).select(
-            "user_id", "event_id", "ts", "event_type", "value"
-        )
-        if api == "portable":
-            out = apply_with_state(sdf, "user_id", latest_image_state_fn)
-        else:
-            out = transform_with_state(
-                sdf, "user_id", TwsLatestImageProcessor(),
-                TwsLatestImageProcessor.OUTPUT_SCHEMA,
-            )
+        ).select("user_id", "event_id", "ts", "event_type", "value")
+        out = apply_with_state(sdf, "user_id", latest_image_state_fn)
         t0 = time.perf_counter()
         run_available_now(out, "append").count()
         return time.perf_counter() - t0
 
-    apis = ["portable"] + (["tws"] if tws_available() else [])
-    for api in apis:
-        run(api, None)  # warm codegen/state machinery off the clock
-        one = run(api, None)
-        many = run(api, 1)
-        extra = max(n_files - 1, 1)
-        print(
-            f"{api:<8} 1 batch {one:5.2f}s | {n_files} batches {many:5.2f}s "
-            f"| per-extra-batch overhead {(many - one) / extra * 1e3:6.0f} ms"
-        )
-    spark.stop()
-
-
-def tws_main(perrow: bool) -> None:
-    """Throughput of transformWithStateInPandas (ValueState processors) on
-    the SAME topologies as --stateful/--perrow, so the only variable is
-    the state API: GroupState tuple codec vs the TWS protobuf state server.
-    Reports events/s and the per-batch wall so the fixed per-batch
-    overhead (state-server handshake, timer scans) is visible separately
-    from the per-row cost."""
-    k = int(sys.argv[1]) if len(sys.argv) > 1 else 10
-    spark = get_spark("stream-bench-tws")
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    from flink_realtime_spark.streaming.stateful import (
-        TwsLatestImageProcessor,
-        TwsRunningSumProcessor,
-        transform_with_state,
-        tws_available,
-    )
-    from tools.scale_probe import build
-
-    if not tws_available():
-        print("transformWithStateInPandas unavailable (no google.protobuf)")
-        spark.stop()
-        return
-    sf_dir = SRC if k == 1 else build(spark, k)
-    ev_path = os.path.join(sf_dir, "events.parquet")
-    n_events = spark.read.parquet(ev_path).count()
-    if os.path.isdir(ev_path):
-        sdf = file_stream_source(spark, ev_path, EVENTS_DDL)
-    else:
-        sdf = file_stream_source(spark, sf_dir, EVENTS_DDL, glob="events.parquet")
-    if perrow:
-        proc, label = TwsRunningSumProcessor, "running_sum per-row"
-        out = transform_with_state(
-            sdf.select("user_id", "event_id", "value"),  # same as --perrow
-            "user_id",
-            proc(),
-            proc.OUTPUT_SCHEMA,
-        )
-    else:
-        proc, label = TwsLatestImageProcessor, "latest-image"
-        out = transform_with_state(
-            sdf.select("user_id", "event_id", "ts", "event_type", "value"),
-            "user_id",
-            proc(),
-            proc.OUTPUT_SCHEMA,
-        )
-    t0 = time.perf_counter()
-    n_out = run_available_now(out, "append").count()
-    dt = time.perf_counter() - t0
+    run(None)  # warm codegen/state machinery off the clock
+    one = run(None)
+    many = run(1)
+    extra = max(n_files - 1, 1)
     print(
-        f"streamed {n_events} events through transformWithStateInPandas "
-        f"{label} in {dt:.2f}s = {n_events / dt / 1e3:.0f}k events/s "
-        f"({n_out} rows out)"
+        f"1 batch {one:5.2f}s | {n_files} batches {many:5.2f}s "
+        f"| per-extra-batch overhead {(many - one) / extra * 1e3:6.0f} ms"
     )
     spark.stop()
 
@@ -335,14 +253,6 @@ def main() -> None:
     if "--batch-overhead" in sys.argv:
         sys.argv.remove("--batch-overhead")
         batch_overhead_main()
-        return
-    if "--tws-perrow" in sys.argv:
-        sys.argv.remove("--tws-perrow")
-        tws_main(perrow=True)
-        return
-    if "--tws" in sys.argv:
-        sys.argv.remove("--tws")
-        tws_main(perrow=False)
         return
     if "--perrow" in sys.argv:
         sys.argv.remove("--perrow")
