@@ -83,6 +83,15 @@ HEADLINE = [
 STREAM_EXEC = {"src_stream_smoke", "sink_upsert_latest", "state_change_feed"}
 
 
+def warmup_failure(key: str, exc: Exception) -> tuple[str, str]:
+    """(key, "ExcType: first line of the message") for a headline key whose
+    warm-up raised, printed as one `# warm-up failed:` stderr line, so a
+    key broken at the warm-up scale does not vanish."""
+    reason = ": ".join([type(exc).__name__, *str(exc).strip().splitlines()[:1]])
+    print(f"# warm-up failed: {key}: {reason}", file=sys.stderr)
+    return key, reason
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
@@ -100,14 +109,15 @@ def main() -> None:
     # a continuously-serving engine would have them. The measured sf runs
     # below still perform all of their own analysis, optimization,
     # scheduling, IO and execution.
+    warmup_failures = []
     for key in HEADLINE:
         fn = registry.QUERIES.get(key)
         if fn is None:
             continue
         try:
             fn(spark, "/root/testdata/sf0.001").count()
-        except Exception:
-            pass
+        except Exception as e:
+            warmup_failures.append(warmup_failure(key, e))
 
     # Median-of-N per key (VERDICT r4 #4): single-shot cold-plan timings
     # showed ±29% scheduler/codegen jitter on sub-second keys between
@@ -189,7 +199,10 @@ def main() -> None:
         )
     try:
         with open("/tmp/spark_graft_bench_spread.json", "w") as fh:
-            json.dump({"spread": spread, **payload}, fh)
+            json.dump(
+                {"spread": spread, "warmup_failures": warmup_failures, **payload},
+                fh,
+            )
     except OSError:
         pass  # sidecar is best-effort; the stdout contract is the artifact
 

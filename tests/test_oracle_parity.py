@@ -98,13 +98,18 @@ def test_driver_window_rotation():
     # self-check (ADVICE r11: derive the marker from the exprs helper,
     # never a hand-typed SQL literal): every oracle embedding the
     # variant long-coercion truncation contract must already carry r11
-    # driver evidence — the contract shipped and was sampled in r11.
+    # driver evidence — the contract shipped and was sampled in r11. The
+    # marker is the helper's SQL around its column, so an oracle on any
+    # column name is covered.
     from flink_realtime_spark import exprs
 
-    markers = [exprs.json_k_variant_sql("props"), exprs.json_k_variant_sql("p")]
+    sentinel = "<col>"
+    fragments = [
+        f for f in exprs.json_k_variant_sql(sentinel).split(sentinel) if f
+    ]
     trunc_marked = {
         k for k, sql in registry.ORACLES.items()
-        if sql and any(m in sql for m in markers)
+        if sql and all(f in sql for f in fragments)
     }
     assert trunc_marked, "variant-contract oracles disappeared"
     not_evidenced = [k for k in trunc_marked if latest.get(k, 0) < 11]

@@ -561,6 +561,24 @@ def test_mv_changelog_diff_reconstructs_and_is_minimal(
     assert final == {k: norm(v) for k, v in new_state.items()}
 
 
+def _event_batch(rows):
+    """(event_id, naive datetime, event_type, value) rows as the chunk a
+    state fn receives behind apply_with_state: ts as int64 epoch µs."""
+    import pandas as pd
+
+    return pd.DataFrame(
+        {
+            "event_id": pd.Series([r[0] for r in rows], dtype="int64"),
+            "ts": pd.Series(
+                [pd.Timestamp(r[1]).value // 1000 for r in rows], dtype="int64"
+            ),
+            "user_id": pd.Series([7] * len(rows), dtype="int64"),
+            "event_type": pd.Series([r[2] for r in rows]),
+            "value": pd.Series([r[3] for r in rows], dtype="float64"),
+        }
+    )
+
+
 class _FakeGroupState:
     """Minimal GroupState stand-in: .exists/.get/.update — enough to drive
     an applyInPandasWithState function body without a streaming query."""
@@ -708,30 +726,17 @@ def test_temporal_join_state_fn_tie_discipline():
     carries across micro-batches."""
     import datetime as dt
 
-    import pandas as pd
-
     from flink_realtime_spark.streaming.stateful import (
         temporal_join_state_fn,
     )
 
     t0 = dt.datetime(2024, 1, 1, 12, 0, 0)
 
-    def batch(rows):
-        return pd.DataFrame(
-            {
-                "event_id": pd.Series([r[0] for r in rows], dtype="int64"),
-                "ts": pd.Series([pd.Timestamp(r[1]) for r in rows]),
-                "user_id": pd.Series([7] * len(rows), dtype="int64"),
-                "event_type": pd.Series([r[2] for r in rows]),
-                "value": pd.Series([r[3] for r in rows], dtype="float64"),
-            }
-        )
-
     state = _FakeGroupState()
     got = []
     # batch 1, deliberately unsorted: purchase id 1 ties the clicks at t0;
     # clicks ids 5 and 3 tie each other; purchase id 0 precedes everything
-    b1 = batch(
+    b1 = _event_batch(
         [
             (5, t0, "click", 5.0),
             (1, t0, "purchase", 99.0),
@@ -750,7 +755,7 @@ def test_temporal_join_state_fn_tie_discipline():
 
     # batch 2: the click-3 version carries across the batch boundary
     got2 = []
-    b2 = batch([(9, t0 + dt.timedelta(minutes=5), "purchase", 99.0)])
+    b2 = _event_batch([(9, t0 + dt.timedelta(minutes=5), "purchase", 99.0)])
     for out in temporal_join_state_fn((7,), iter([b2]), state):
         got2.extend(
             (r.purchase_id, r.click_id, r.click_value)
@@ -767,30 +772,17 @@ def test_forward_asof_state_fn_tie_discipline():
     batches until a purchase arrives."""
     import datetime as dt
 
-    import pandas as pd
-
     from flink_realtime_spark.streaming.stateful import (
         forward_asof_state_fn,
     )
 
     t0 = dt.datetime(2024, 1, 1, 12, 0, 0)
 
-    def batch(rows):
-        return pd.DataFrame(
-            {
-                "event_id": pd.Series([r[0] for r in rows], dtype="int64"),
-                "ts": pd.Series([pd.Timestamp(r[1]) for r in rows]),
-                "user_id": pd.Series([7] * len(rows), dtype="int64"),
-                "event_type": pd.Series([r[2] for r in rows]),
-                "value": pd.Series([r[3] for r in rows], dtype="float64"),
-            }
-        )
-
     state = _FakeGroupState()
     got = []
     # unsorted batch: purchase id 2 at t0-1m has no pending click (noop);
     # click id 1 ties purchases ids 6 and 4 at t0 — smallest id (4) wins
-    b1 = batch(
+    b1 = _event_batch(
         [
             (6, t0, "purchase", 6.0),
             (1, t0, "click", 99.0),
@@ -808,7 +800,7 @@ def test_forward_asof_state_fn_tie_discipline():
 
     # click 8 is still pending; the next batch's purchase resolves it
     got2 = []
-    b2 = batch([(9, t0 + dt.timedelta(minutes=9), "purchase", 9.0)])
+    b2 = _event_batch([(9, t0 + dt.timedelta(minutes=9), "purchase", 9.0)])
     for out in forward_asof_state_fn((7,), iter([b2]), state):
         got2.extend(
             (r.click_id, r.purchase_id, r.purchase_value)
@@ -825,28 +817,16 @@ def test_nearest_asof_state_fn_tie_discipline():
     across batches."""
     import datetime as dt
 
-    import pandas as pd
-
     from flink_realtime_spark.streaming.stateful import (
         nearest_asof_state_fn,
     )
 
     t0 = dt.datetime(2024, 1, 1, 12, 0, 0)
 
-    def batch(rows):
-        return pd.DataFrame(
-            {
-                "event_id": pd.Series([r[0] for r in rows], dtype="int64"),
-                "ts": pd.Series([pd.Timestamp(r[1]) for r in rows]),
-                "user_id": pd.Series([7] * len(rows), dtype="int64"),
-                "event_type": pd.Series([r[2] for r in rows]),
-                "value": pd.Series([r[3] for r in rows], dtype="float64"),
-            }
-        )
-
     def run(state, rows):
         got = []
-        for out in nearest_asof_state_fn((7,), iter([batch(rows)]), state):
+        batches = iter([_event_batch(rows)])
+        for out in nearest_asof_state_fn((7,), batches, state):
             got.extend(
                 (r.click_id, r.purchase_id, r.purchase_value, r.rev)
                 for r in out.itertuples(index=False)
@@ -885,8 +865,6 @@ def test_nearest_asof_state_fn_straggler_recorrects():
     straggler FARTHER than the current best never corrects at all."""
     import datetime as dt
 
-    import pandas as pd
-
     from flink_realtime_spark.streaming.stateful import (
         nearest_asof_state_fn,
     )
@@ -894,20 +872,10 @@ def test_nearest_asof_state_fn_straggler_recorrects():
     t0 = dt.datetime(2024, 1, 1, 12, 0, 0)
     m = dt.timedelta(minutes=1)
 
-    def batch(rows):
-        return pd.DataFrame(
-            {
-                "event_id": pd.Series([r[0] for r in rows], dtype="int64"),
-                "ts": pd.Series([pd.Timestamp(r[1]) for r in rows]),
-                "user_id": pd.Series([7] * len(rows), dtype="int64"),
-                "event_type": pd.Series([r[2] for r in rows]),
-                "value": pd.Series([r[3] for r in rows], dtype="float64"),
-            }
-        )
-
     def run(state, rows):
         got = []
-        for out in nearest_asof_state_fn((7,), iter([batch(rows)]), state):
+        batches = iter([_event_batch(rows)])
+        for out in nearest_asof_state_fn((7,), batches, state):
             got.extend(
                 (r.click_id, r.purchase_id, r.purchase_value, r.rev)
                 for r in out.itertuples(index=False)
@@ -965,26 +933,13 @@ def _mk_rows(types, ts_set):
 
 
 def _run_split(fn, rows, cuts, out_cols):
-    import pandas as pd
-
-    def batch(rs):
-        return pd.DataFrame(
-            {
-                "event_id": pd.Series([r[0] for r in rs], dtype="int64"),
-                "ts": pd.Series([pd.Timestamp(r[1]) for r in rs]),
-                "user_id": pd.Series([7] * len(rs), dtype="int64"),
-                "event_type": pd.Series([r[2] for r in rs]),
-                "value": pd.Series([r[3] for r in rs], dtype="float64"),
-            }
-        )
-
     state = _FakeGroupState()
     bounds = sorted({min(c, len(rows)) for c in cuts} | {0, len(rows)})
     got = []
     for a, b in zip(bounds, bounds[1:]):
         if a == b:
             continue
-        for out in fn((7,), iter([batch(rows[a:b])]), state):
+        for out in fn((7,), iter([_event_batch(rows[a:b])]), state):
             got.extend(
                 tuple(getattr(r, c) for c in out_cols)
                 for r in out.itertuples(index=False)

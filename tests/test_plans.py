@@ -125,6 +125,45 @@ def test_q21_single_lineitem_scan(spark):
     assert "window" in low
 
 
+def test_apply_with_state_feeds_event_time_as_long_with_watermark(spark):
+    """apply_with_state hands the Python state operator event time as an
+    epoch-µs LONG that still carries the watermark delay, so event-time
+    timeouts keep their watermark and Spark's late-row filter compares
+    µs with µs."""
+    from flink_realtime_spark.streaming.sources import events_stream
+    from flink_realtime_spark.streaming.stateful import (
+        apply_with_state,
+        timeout_alert_state_fn,
+    )
+
+    sdf = events_stream(spark, SF_DIR).withWatermark("ts", "1 minute")
+    out = apply_with_state(sdf, "user_id", timeout_alert_state_fn, timeout="event")
+
+    def find(node, name):
+        if node.nodeName() == name:
+            return node
+        kids = node.children()
+        for i in range(kids.size()):
+            hit = find(kids.apply(i), name)
+            if hit is not None:
+                return hit
+        return None
+
+    node = find(
+        out._jdf.queryExecution().analyzed(), "FlatMapGroupsInPandasWithState"
+    )
+    assert node is not None
+    child_out = node.child().output()
+    ts = [
+        a for a in (child_out.apply(i) for i in range(child_out.size()))
+        if a.name() == "ts"
+    ]
+    assert len(ts) == 1
+    assert ts[0].dataType().typeName() == "long"
+    assert ts[0].metadata().contains("spark.watermarkDelayMs")
+    assert ts[0].metadata().getLong("spark.watermarkDelayMs") == 60_000
+
+
 def test_aqe_splits_skewed_join(spark):
     """The 100 TB skew posture (SCALE.md Joins): a hot key must trigger
     AQE's skew-join split at runtime — SortMergeJoin(skew=true) in the

@@ -1,8 +1,9 @@
 """State functions driven directly, without Spark.
 
 applyInPandasWithState hands a state fn its key, an iterator of pandas
-chunks and a GroupState. A stub GroupState is enough to check a state fn's
-output and state against a plain row-by-row reference.
+chunks and a GroupState; apply_with_state turns event time into int64
+epoch µs before the crossing. A stub GroupState is enough to check a state
+fn's output and state against a plain row-by-row reference.
 """
 
 from __future__ import annotations
@@ -38,7 +39,7 @@ def reference_latest_image(key, pdf_iter, state):
     for pdf in pdf_iter:
         for r in pdf.itertuples(index=False):
             cand = (
-                int(r.ts.value // 1000),
+                int(r.ts),
                 int(r.event_id),
                 str(r.event_type),
                 float(r.value),
@@ -58,14 +59,19 @@ def reference_latest_image(key, pdf_iter, state):
         )
 
 
+def us(ts) -> int:
+    """Epoch µs of a naive timestamp string (or µs int, passed through)."""
+    return ts if isinstance(ts, int) else pd.Timestamp(ts).value // 1000
+
+
 def chunk(rows: list[tuple]) -> pd.DataFrame:
-    """(ts string, event_id, event_type, value) rows as the chunk pandas
-    receives from Arrow: naive datetime64[ns] ts, int64 ids."""
+    """(ts, event_id, event_type, value) rows as the chunk pandas receives
+    from Arrow behind apply_with_state: int64 epoch-µs ts, int64 ids."""
     return pd.DataFrame(
         {
             "user_id": pd.Series([7] * len(rows), dtype="int64"),
             "event_id": pd.Series([r[1] for r in rows], dtype="int64"),
-            "ts": pd.Series([pd.Timestamp(r[0]) for r in rows], dtype="datetime64[ns]"),
+            "ts": pd.Series([us(r[0]) for r in rows], dtype="int64"),
             "event_type": pd.Series([r[2] for r in rows], dtype="object"),
             "value": pd.Series([r[3] for r in rows], dtype="float64"),
         }
@@ -135,16 +141,21 @@ def test_exact_tie_first_row_wins():
     assert state[2] == "state"
 
 
-def test_sub_microsecond_ts_floors():
-    # ns the µs floor must drop: the ...0009 row does not beat event 2 on ts
+def test_int64_us_ts_passes_through_verbatim():
+    # A Spark TIMESTAMP has no sub-µs part, so no floor happens here: the
+    # µs values, pre-1970 negatives included, reach state and output as-is
     chunks = [
         chunk([
-            ("2024-01-01 10:00:00.000001009", 1, "a", 1.0),
-            ("2024-01-01 10:00:00.000001000", 2, "b", 2.0),
+            (-1, 1, "a", 1.0),
+            (-86_400_000_001, 2, "b", 2.0),
+            (-2, 3, "c", 3.0),
         ])
     ]
-    _, state = assert_same(chunks)
-    assert state[:2] == (1_704_103_200_000_001, 2)
+    got, state = assert_same(chunks)
+    assert state[:2] == (-1, 1)
+    assert got[0]["last_ts_us"].tolist() == [-1]
+    got, state = assert_same([chunk([(1_704_103_200_000_001, 9, "d", 4.0)])], state)
+    assert state[:2] == (1_704_103_200_000_001, 9)
 
 
 def test_empty_chunk():
@@ -167,16 +178,16 @@ def test_output_dtypes():
 
 def test_random_chunks_match_reference():
     rng = np.random.default_rng(0)
-    base = pd.Timestamp("2024-01-01").value
+    base = us("2024-01-01")
     for _ in range(200):
         chunks = []
         for _ in range(int(rng.integers(1, 4))):
             n = int(rng.integers(0, 6))
             # few distinct ts and ids, so ties are common
-            ts = base + rng.integers(0, 3, n) * 1000 + rng.integers(0, 2, n)
+            ts = base + rng.integers(0, 3, n) * 1000
             chunks.append(chunk([
-                (pd.Timestamp(int(t)), int(e), f"t{j}", float(j))
+                (int(t), int(e), f"t{j}", float(j))
                 for j, (t, e) in enumerate(zip(ts, rng.integers(0, 3, n)))
             ]))
-        state = None if rng.random() < 0.5 else (base // 1000 + 1, 1, "s", -1.0)
+        state = None if rng.random() < 0.5 else (base + 1, 1, "s", -1.0)
         assert_same(chunks, state)

@@ -26,6 +26,7 @@ from flink_realtime_spark import registry
 from flink_realtime_spark.exprs import epoch_us
 from flink_realtime_spark.streaming.sources import (
     EVENTS_DDL,
+    EVENTS_DDL_NTZ,
     events_stream,
     file_stream_source,
     run_available_now,
@@ -195,6 +196,53 @@ def test_apply_with_state_latest_image_multibatch(spark, chunked_events_dir):
     assert len(final) == len(batch)
     for col in ["user_id", "last_event_id", "last_type", "last_value", "last_ts_us"]:
         assert final[col].tolist() == batch[col].tolist(), col
+
+
+def test_apply_with_state_event_time_is_epoch_us_in_any_session_zone(spark, duck):
+    """State fns receive event time as epoch µs whatever the session time
+    zone: under America/New_York the latest image's last_ts_us still
+    equals the oracle's epoch_us(ts), as under UTC (pyspark would hand
+    them the local wall clock, off by the UTC offset from the epoch
+    watermark timeout_alert_state_fn compares against). A TIMESTAMP_NTZ
+    stream crosses as its wall clock read as UTC, the same value."""
+    spark.conf.set("spark.sql.streaming.stateStore.providerClass", ROCKSDB)
+    cols = ["user_id", "event_id", "ts", "event_type", "value"]
+    ltz = events_stream(spark, SF_DIR).select(*cols)
+    ntz = file_stream_source(
+        spark, SF_DIR, EVENTS_DDL_NTZ, glob="events.parquet"
+    ).select(*cols)
+    assert [dict(sdf.dtypes)["ts"] for sdf in (ltz, ntz)] == [
+        "timestamp", "timestamp_ntz",
+    ]
+    want = duck.execute(
+        """
+        SELECT user_id, event_id AS last_event_id, epoch_us(ts) AS last_ts_us
+        FROM events
+        QUALIFY ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) = 1
+        ORDER BY user_id
+        """
+    ).fetchall()
+    # set before apply_with_state: its projection resolves the zone then
+    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+    try:
+        outs = [
+            run_available_now(
+                apply_with_state(sdf, "user_id", latest_image_state_fn), "append"
+            ).toPandas()
+            for sdf in (ltz, ntz)
+        ]
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", "UTC")
+    for got in outs:
+        final = got.groupby("user_id", sort=True).last().reset_index()
+        rows = list(
+            zip(
+                final["user_id"].tolist(),
+                final["last_event_id"].tolist(),
+                final["last_ts_us"].tolist(),
+            )
+        )
+        assert rows == [tuple(r) for r in want]
 
 
 def test_upsert_store_two_phase_merge(spark, chunked_events_dir):
