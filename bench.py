@@ -17,7 +17,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from flink_realtime_spark import registry
-from flink_realtime_spark.session import get_spark
+from flink_realtime_spark.session import REFUSED_CONFS, get_spark
 
 # Headline set: one representative per major category (keys missing from the
 # registry — not yet implemented this round — are skipped silently), PLUS
@@ -90,6 +90,18 @@ def warmup_failure(key: str, exc: Exception) -> tuple[str, str]:
     reason = ": ".join([type(exc).__name__, *str(exc).strip().splitlines()[:1]])
     print(f"# warm-up failed: {key}: {reason}", file=sys.stderr)
     return key, reason
+
+
+def sidecar(spread: dict, warmup_failures: list, payload: dict) -> dict:
+    """The /tmp sidecar record: the stdout payload plus the [min, max]
+    envelopes, the warm-up failures and the (conf, reason) pairs the
+    session refused to pin (session.REFUSED_CONFS)."""
+    return {
+        "spread": spread,
+        "warmup_failures": warmup_failures,
+        "refused_confs": [list(p) for p in REFUSED_CONFS],
+        **payload,
+    }
 
 
 def main() -> None:
@@ -199,10 +211,7 @@ def main() -> None:
         )
     try:
         with open("/tmp/spark_graft_bench_spread.json", "w") as fh:
-            json.dump(
-                {"spread": spread, "warmup_failures": warmup_failures, **payload},
-                fh,
-            )
+            json.dump(sidecar(spread, warmup_failures, payload), fh)
     except OSError:
         pass  # sidecar is best-effort; the stdout contract is the artifact
 

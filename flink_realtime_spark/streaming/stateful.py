@@ -15,6 +15,11 @@ equivalence replays.
 Scale notes (100 TB): state lives in the executor-local RocksDB store keyed
 by shuffle partition; state size is bounded by (keys × state row), not by
 input volume. The batch analogs are single-shuffle window compositions.
+A key-grouped fn (latest_image_state_fn) keeps one state row per key
+group: each trigger rewrites every touched group's arrays, O(K/256) per
+group for K keys, where the ADS store it feeds already rewrites O(K).
+The key→group mapping (KEY_GROUPS, xxhash64) must never change under an
+existing checkpoint.
 """
 
 from __future__ import annotations
@@ -31,6 +36,16 @@ from flink_realtime_spark.tables import Warehouse
 # update() block below; factory-built fns register their instances at
 # construction time (see make_sequence/absence/retry_state_fn)
 _STATE_SCHEMAS: dict = {}
+
+# State fns registered here take one KEY GROUP per call instead of one key
+# (apply_with_state groups their rows by pmod(xxhash64(key), KEY_GROUPS)).
+# A key's group is where its state lives, so KEY_GROUPS and the hash must
+# never change under an existing checkpoint: restored state would be read
+# by the wrong group. 256 leaves several groups per task at any
+# shuffle-partition count the engine pins (the host's cores) and keeps the
+# calls per trigger far below the keys.
+_KEY_GROUPED: set = set()
+KEY_GROUPS = 256
 
 
 def latest_image(df: DataFrame, keys: list[str], order_cols: list) -> DataFrame:
@@ -64,7 +79,7 @@ def latest_image(df: DataFrame, keys: list[str], order_cols: list) -> DataFrame:
 def cdc_latest_image(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CDC changelog compaction (Flink CDC → DIM layer): the events table
     read as a per-user changelog, compacted to the latest image. Streaming
-    form: LatestImageProcessor below, equivalence-tested."""
+    form: latest_image_state_fn below, equivalence-tested."""
     wh = Warehouse(spark, sf_dir)
     out = latest_image(
         wh.events,
@@ -339,43 +354,50 @@ def new_visitor_state_fn(key, pdf_iter, state):
 
 
 def latest_image_state_fn(key, pdf_iter, state):
-    """GroupState per user holding the running latest (ts_us, event_id,
-    type, value); emits the refreshed image once per micro-batch — the
-    upsert/update stream a Flink retract sink would consume.
+    """Latest image per user, one call per KEY GROUP: apply_with_state
+    groups this fn's rows by pmod(xxhash64(user_id), KEY_GROUPS), so one
+    call sees every user of its group. The group's state is one row of
+    parallel arrays, one element per user the group has seen: (user_id,
+    ts_us, event_id, event_type, value). Emits the refreshed image of
+    every user present in the micro-batch — the upsert/update stream a
+    Flink retract sink would consume.
 
-    Each chunk's best row is found with numpy on the ts/event_id columns
-    (a per-row loop costs ~4x as much per key); the total order is
-    (ts_us, event_id) and on an exact tie the earlier row (the state
-    first) wins."""
+    The order per user is (ts_us, event_id); on an exact tie the earlier
+    row wins, and the state counts as earliest. One stable lexsort over
+    the state and the chunks, by (user, ts, event_id, -position), puts
+    each user's winner last in its run, so the whole group is decided in
+    numpy without a per-user frame."""
     import numpy as np
     import pandas as pd
 
-    best = tuple(state.get) if state.exists else None
+    dtypes = ("int64", "int64", "int64", object, "float64")
+    prior = state.get if state.exists else [[]] * len(dtypes)
+    parts = [[np.asarray(arr, dtype=dt)] for arr, dt in zip(prior, dtypes)]
+    n_state = len(prior[0])
     for pdf in pdf_iter:
-        if not len(pdf):
-            continue
-        ts_us = pdf["ts"].to_numpy(dtype="int64")
-        eid = pdf["event_id"].to_numpy(dtype="int64")
-        at_max = np.flatnonzero(ts_us == ts_us.max())
-        i = at_max[np.argmax(eid[at_max])]  # argmax: first of equal ids
-        if best is None or (ts_us[i], eid[i]) > (best[0], best[1]):
-            best = (
-                int(ts_us[i]),
-                int(eid[i]),
-                str(pdf["event_type"].iat[i]),
-                float(pdf["value"].iat[i]),
-            )
-    if best is not None:
-        state.update(best)
-        yield pd.DataFrame(
-            {
-                "user_id": [int(key[0])],
-                "last_event_id": [best[1]],
-                "last_type": [best[2]],
-                "last_value": [best[3]],
-                "last_ts_us": [best[0]],
-            }
-        )
+        for part, col, dt in zip(
+            parts, ("user_id", "ts", "event_id", "event_type", "value"), dtypes
+        ):
+            part.append(pdf[col].to_numpy(dtype=dt))
+    uid, ts_us, eid, etype, value = (np.concatenate(p) for p in parts)
+    if len(uid) == n_state:
+        return  # no row in this micro-batch
+    order = np.lexsort((-np.arange(len(uid)), eid, ts_us, uid))
+    by_user = uid[order]
+    best = order[np.append(by_user[1:] != by_user[:-1], True)]
+    state.update(
+        tuple(a[best].tolist() for a in (uid, ts_us, eid, etype, value))
+    )
+    fresh = best[np.isin(uid[best], uid[n_state:])]
+    yield pd.DataFrame(
+        {
+            "user_id": uid[fresh],
+            "last_event_id": eid[fresh],
+            "last_type": etype[fresh],
+            "last_value": value[fresh],
+            "last_ts_us": ts_us[fresh],
+        }
+    )
 
 
 def make_sequence_state_fn(step_types: tuple, within_us: int | None = None):
@@ -568,7 +590,8 @@ _STATE_SCHEMAS.update({
     # factory-built fns (make_sequence/absence/retry_state_fn) register
     # their own instances at construction time
     latest_image_state_fn: (
-        "ts_us LONG, event_id LONG, event_type STRING, value DOUBLE",
+        "user_id ARRAY<LONG>, ts_us ARRAY<LONG>, event_id ARRAY<LONG>, "
+        "event_type ARRAY<STRING>, value ARRAY<DOUBLE>",
         "user_id LONG, last_event_id LONG, last_type STRING, "
         "last_value DOUBLE, last_ts_us LONG",
     ),
@@ -582,6 +605,7 @@ _STATE_SCHEMAS.update({
         "valid_from_us LONG, valid_to_us LONG, is_current BOOLEAN",
     ),
 })
+_KEY_GROUPED.add(latest_image_state_fn)
 
 
 def make_temporal_join_state_fn(version_type: str, fact_type: str):
@@ -852,6 +876,12 @@ def apply_with_state(
     surface. ``timeout``: "none" | "event" (event-time timers driven by
     the watermark — the stream must carry withWatermark) | "processing".
 
+    A key-grouped fn (registered in _KEY_GROUPED) is grouped by the
+    LONG column pmod(xxhash64(key), KEY_GROUPS) instead of the key: each
+    pyspark call (about 1.4–2.0 ms of fixed per-group work) then covers
+    every key of one group. Such a fn takes no timeout, since a timeout
+    fires per grouping key, i.e. per group.
+
     Event-time contract: every TIMESTAMP column reaches the state fn as
     an int64 epoch-µs LONG under the same name, whatever the session
     time zone (a TIMESTAMP_NTZ column as its wall clock read as UTC, the
@@ -865,6 +895,12 @@ def apply_with_state(
     with µs."""
     from pyspark.sql.streaming.state import GroupStateTimeout
 
+    grouped = state_fn in _KEY_GROUPED
+    if grouped and timeout != "none":
+        raise ValueError(
+            f"{state_fn.__name__} takes one key group per call; "
+            f"timeout={timeout!r} would fire per group, not per key"
+        )
     conf = {
         "none": GroupStateTimeout.NoTimeout,
         "event": GroupStateTimeout.EventTimeTimeout,
@@ -882,6 +918,10 @@ def apply_with_state(
                 "MICROSECOND", F.lit("1970-01-01").cast("timestamp_ntz"), c
             ).alias(f.name, metadata=f.metadata)
         cols.append(c)
+    if grouped:
+        group = F.pmod(F.xxhash64(key), F.lit(KEY_GROUPS))
+        cols.append(group.alias("__key_group"))
+        key = "__key_group"
     return sdf.select(*cols).groupBy(key).applyInPandasWithState(
         state_fn,
         outputStructType=output_schema,

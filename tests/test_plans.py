@@ -164,6 +164,50 @@ def test_apply_with_state_feeds_event_time_as_long_with_watermark(spark):
     assert ts[0].metadata().getLong("spark.watermarkDelayMs") == 60_000
 
 
+def test_latest_image_groups_by_fixed_key_group(spark):
+    """latest_image_state_fn's state lives per key group: the Python state
+    operator groups by one LONG column defined as pmod(xxhash64(user_id),
+    256), not by user_id. Restored state is found by that mapping, so a
+    change to the group count or the hash must fail here first."""
+    from flink_realtime_spark.streaming.sources import events_stream
+    from flink_realtime_spark.streaming.stateful import (
+        apply_with_state,
+        latest_image_state_fn,
+    )
+
+    out = apply_with_state(events_stream(spark, SF_DIR), "user_id", latest_image_state_fn)
+    (node,) = [
+        n for n in _iter_nodes(out._jdf.queryExecution().analyzed())
+        if n.nodeName() == "FlatMapGroupsInPandasWithState"
+    ]
+    grouping = node.groupingAttributes()
+    assert grouping.size() == 1
+    group = grouping.apply(0)
+    assert group.name() != "user_id"
+    assert group.dataType().typeName() == "long"
+    projected = node.child().projectList()
+    (defn,) = [
+        e for e in (projected.apply(i) for i in range(projected.size()))
+        if e.exprId().equals(group.exprId())
+    ]
+    assert defn.child().sql() == "pmod(xxhash64(user_id), CAST(256 AS BIGINT))"
+
+
+def test_key_grouped_state_fn_refuses_timeouts(spark):
+    """A timeout fires per grouping key, so on a key-grouped fn it would
+    fire per group: apply_with_state refuses it."""
+    from flink_realtime_spark.streaming.sources import events_stream
+    from flink_realtime_spark.streaming.stateful import (
+        apply_with_state,
+        latest_image_state_fn,
+    )
+
+    sdf = events_stream(spark, SF_DIR).withWatermark("ts", "1 minute")
+    for timeout in ("event", "processing"):
+        with pytest.raises(ValueError, match="per group"):
+            apply_with_state(sdf, "user_id", latest_image_state_fn, timeout=timeout)
+
+
 def test_aqe_splits_skewed_join(spark):
     """The 100 TB skew posture (SCALE.md Joins): a hot key must trigger
     AQE's skew-join split at runtime — SortMergeJoin(skew=true) in the

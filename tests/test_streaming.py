@@ -19,6 +19,7 @@ import os
 import shutil
 import tempfile
 
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -177,8 +178,14 @@ def test_apply_with_state_latest_image_multibatch(spark, chunked_events_dir):
         "user_id",
         latest_image_state_fn,
     )
-    emitted = run_available_now(out, "append").toPandas()
-    # Update-stream semantics: the final image per key is the last emission.
+    _assert_last_images_are_cdc_latest_image(
+        spark, run_available_now(out, "append").toPandas()
+    )
+
+
+def _assert_last_images_are_cdc_latest_image(spark, emitted):
+    """Update-stream semantics: the final image per key is the last
+    emission, and it must equal the batch latest image."""
     final = emitted.groupby("user_id", sort=True).last().reset_index()
     batch = (
         registry.QUERIES["cdc_latest_image"](spark, SF_DIR)
@@ -243,6 +250,78 @@ def test_apply_with_state_event_time_is_epoch_us_in_any_session_zone(spark, duck
             )
         )
         assert rows == [tuple(r) for r in want]
+
+
+def test_apply_with_state_latest_image_restart_restores_group_state(spark, tmp_path):
+    """latest_image_state_fn keeps one state row per key group. Two files
+    run on RocksDB with Arrow batches small enough to split every group
+    over several chunks; the query stops, a third file brings rows older
+    than the stored image of half the users, and the query restarts on the
+    same checkpoint. The last image emitted per user must equal
+    cdc_latest_image: a user whose group state were lost or misread on
+    restart would end on its stale row."""
+    spark.conf.set("spark.sql.streaming.stateStore.providerClass", ROCKSDB)
+    src, ckpt = tmp_path / "events", str(tmp_path / "ckpt")
+    src.mkdir()
+    ev = load_table(spark, SF_DIR, "events")
+    n = ev.count()
+
+    def write(df, name):
+        part = tmp_path / f"part_{name}"
+        df.coalesce(1).write.parquet(str(part))
+        (f,) = [f for f in os.listdir(part) if f.endswith(".parquet")]
+        os.rename(part / f, src / f"{name}.parquet")
+
+    emitted = []
+
+    def run():
+        sdf = file_stream_source(spark, str(src), EVENTS_DDL, max_files_per_trigger=1)
+        out = apply_with_state(
+            sdf.select("user_id", "event_id", "ts", "event_type", "value"),
+            "user_id",
+            latest_image_state_fn,
+        )
+        q = (
+            out.writeStream.foreachBatch(
+                lambda bdf, bid: emitted.append((bid, bdf.toPandas()))
+            )
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+
+    prior = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "16")
+    try:
+        write(ev.filter(F.col("event_id") < n / 2), "chunk0")
+        write(ev.filter(F.col("event_id") >= n / 2), "chunk1")
+        run()
+        stale = (
+            ev.filter(F.col("user_id") % 2 == 0)
+            .groupBy("user_id")
+            .agg(F.min("ts").alias("ts"))
+            .select(
+                (F.col("user_id") + 10 * n).alias("event_id"),
+                (F.col("ts") - F.expr("INTERVAL 1 DAY")).alias("ts"),
+                "user_id",
+                F.lit("stale").alias("event_type"),
+                F.lit(-1.0).alias("value"),
+                F.lit(None).cast("string").alias("props"),
+            )
+        )
+        stale_users = sorted(r.user_id for r in stale.select("user_id").collect())
+        write(stale, "chunk2")
+        run()
+    finally:
+        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", prior)
+
+    assert [bid for bid, _ in emitted] == [0, 1, 2]
+    assert sorted(emitted[-1][1]["user_id"].tolist()) == stale_users
+    assert "stale" not in set(emitted[-1][1]["last_type"])
+    _assert_last_images_are_cdc_latest_image(
+        spark, pd.concat([pdf for _, pdf in emitted], ignore_index=True)
+    )
 
 
 def test_upsert_store_two_phase_merge(spark, chunked_events_dir):

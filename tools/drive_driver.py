@@ -14,6 +14,7 @@ Usage: python /tmp/drive_driver.py [--master local[N]] [--shuffle P] [keys...]
 from __future__ import annotations
 
 import hashlib
+import json
 import math
 import os
 import re
@@ -313,6 +314,14 @@ def oracle_mem_limit() -> str:
     return v
 
 
+def refused_confs_line(refused: list[tuple[str, str]]) -> str | None:
+    """One `# refused confs:` line listing the (conf, reason) pairs the
+    session refused to pin, or None when it refused none."""
+    if not refused:
+        return None
+    return f"# refused confs: {json.dumps([list(p) for p in refused])}"
+
+
 def main() -> int:
     global SF
     oracle_mem = oracle_mem_limit()
@@ -475,8 +484,12 @@ def main() -> int:
     print(f"\n{len(keys) - len(failures)}/{len(keys)} keys match")
     if failures:
         print("FAILED:", failures)
-        return 1
-    return 0
+    from flink_realtime_spark.session import REFUSED_CONFS
+
+    line = refused_confs_line(REFUSED_CONFS)
+    if line:
+        print(line)
+    return 1 if failures else 0
 
 
 if __name__ == "__main__":

@@ -43,10 +43,10 @@ SRC = "/root/testdata/sf0.1"
 
 def stateful_main() -> None:
     """Throughput of the keyed Python-state path: per-user latest-image
-    compaction via applyInPandasWithState (RocksDB state store). This is
-    the family every custom stateful operator (CDC compaction, SCD2,
-    timers, NFA) pays for — Arrow batches in, per-key state rows, Arrow
-    out."""
+    compaction via applyInPandasWithState (RocksDB state store, one state
+    row per key group). This is the family every custom stateful operator
+    (CDC compaction, SCD2, timers, NFA) pays for — Arrow batches in, keyed
+    state rows, Arrow out."""
     k = int(sys.argv[1]) if len(sys.argv) > 1 else 10
     spark = get_spark("stream-bench-stateful")
     spark.conf.set(
