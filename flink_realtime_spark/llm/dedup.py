@@ -27,6 +27,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from flink_realtime_spark.exprs import (
     NORM_TEXT_DUCK,
@@ -447,15 +448,22 @@ def llm_dedup_embcos(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    grid = [(i, j) for i in range(n_tiles) for j in range(i, n_tiles)]
-    left_keys = spark.createDataFrame(
-        [(i, i * n_tiles + j) for i, j in grid], "b int, pk int"
-    )
-    right_keys = spark.createDataFrame(
-        [(j, i * n_tiles + j) for i, j in grid], "b int, pk int"
-    )
-    left = bucketed().join(F.broadcast(left_keys), "b")
-    right = bucketed().join(F.broadcast(right_keys), "b")
+    # Tile pair (i, j), i <= j, is cogroup key pk = i·T + j: a left row of
+    # bucket b joins the pairs (b, t) for t in [b, T-1], a right row the
+    # pairs (t, b) for t in [0, b]. Derived in the plan: a Python-list key
+    # table's broadcast runs two Python tasks of ~0.2 s each to ship ten
+    # rows. Only vec_id, emb and pk cross into Python.
+    b, t = F.col("b"), F.col("t")
+
+    def tiled(lo: F.Column, hi: F.Column, pk: F.Column) -> DataFrame:
+        return (
+            bucketed()
+            .withColumn("t", F.explode(F.sequence(lo, hi)))
+            .select("vec_id", "emb", pk.alias("pk"))
+        )
+
+    left = tiled(b, F.lit(n_tiles - 1), b * n_tiles + t)
+    right = tiled(F.lit(0), b, t * n_tiles + b)
 
     def tile_gemm(key, lpdf: pd.DataFrame, rpdf: pd.DataFrame) -> pd.DataFrame:
         empty = pd.DataFrame(
@@ -875,7 +883,14 @@ class MinhashIndex:
 
         if os.path.isdir(d):
             return self.spark.read.schema(ddl).parquet(d)
-        return self.spark.createDataFrame([], ddl)
+        # empty, derived in the plan (Catalyst folds it to an empty
+        # LocalRelation); a Python-list frame runs Python tasks even empty
+        return self.spark.range(1).select(
+            *[
+                F.lit(None).cast(f.dataType).alias(f.name)
+                for f in StructType.fromDDL(ddl).fields
+            ]
+        ).limit(0)
 
     def update(self, batch_docs: DataFrame) -> DataFrame:
         # Per-element hashing stays in whole-stage codegen: explode →

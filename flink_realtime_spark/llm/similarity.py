@@ -174,6 +174,8 @@ def ivf_index(
     ncells centroids against the corpus — one narrow pass. ``n_cells``
     defaults to the corpus-adaptive ivf_geometry derivation (one cheap
     count; pass it explicitly when the caller already knows)."""
+    import numpy as np
+    import pandas as pd
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector, vector_to_array
 
@@ -215,10 +217,11 @@ def ivf_index(
             # KMeans.fit throws on an empty dataset ("Nothing has been
             # added to this summarizer") — an empty corpus has an empty
             # index, not a crashed one (empty-shape probe find, r09).
-            spark = vecs.sparkSession
             return (
                 vecs.select("vec_id", "emb", F.lit(0).alias("cell")).limit(0),
-                spark.createDataFrame([], "cell INT, centroid ARRAY<DOUBLE>"),
+                vecs.select(
+                    F.lit(0).alias("cell"), F.col("emb").alias("centroid")
+                ).limit(0),
             )
         if n_avail == 1:
             # One vector: MLlib rejects k=1 outright (param validator) —
@@ -237,8 +240,17 @@ def ivf_index(
             km.setK(n_avail)
     model = km.fit(train)
     assigned = model.transform(vecs).select("vec_id", "emb", "cell")
+    # From pandas through Arrow: a JVM LocalRelation. A Python list builds
+    # a LogicalRDD whose scan runs Python tasks: llm_knn_ivf's collect was
+    # 891 ms that way, 741 ms this way (median of 7, sf0.1, local[2]).
+    centers = model.clusterCenters()
     centroids = vecs.sparkSession.createDataFrame(
-        [(i, c.tolist()) for i, c in enumerate(model.clusterCenters())],
+        pd.DataFrame(
+            {
+                "cell": np.arange(len(centers), dtype="int32"),
+                "centroid": [c.tolist() for c in centers],
+            }
+        ),
         "cell INT, centroid ARRAY<DOUBLE>",
     )
     return assigned, centroids

@@ -436,6 +436,14 @@ REFIRE_STATE_DDL = (
 _REFIRE_WM_DDL = "wm_us LONG"
 
 
+def _wm_row(spark: SparkSession, wm_us: int | None) -> DataFrame:
+    """The carried watermark as a one-row, one-partition frame derived in
+    the plan: a Python-list frame would run Python tasks to ship it."""
+    return spark.range(0, 1, 1, 1).select(
+        F.lit(wm_us).cast("long").alias("wm_us")
+    )
+
+
 def _refire_delta(batch_df: DataFrame, wm_us: int | None) -> DataFrame:
     """Classify one micro-batch against the carried watermark and produce
     its per-window partial states. ``wm_us`` None = first batch (watermark
@@ -505,9 +513,7 @@ def late_refire_stream_writer(stream_df: DataFrame, store_dir: str):
         tmp = store_dir + ".tmp"
         shutil.rmtree(tmp, ignore_errors=True)
         merged.coalesce(1).write.parquet(os.path.join(tmp, "windows"))
-        spark.createDataFrame([(new_wm,)], _REFIRE_WM_DDL).coalesce(1).write.parquet(
-            os.path.join(tmp, "wm")
-        )
+        _wm_row(spark, new_wm).write.parquet(os.path.join(tmp, "wm"))
         old = store_dir + ".old"
         shutil.rmtree(old, ignore_errors=True)
         if os.path.isdir(store_dir):

@@ -1,9 +1,11 @@
 """Fixed-schema loaders for the ten warehouse tables (FIXTURES.md).
 
-Parquet is self-describing, so no inference runs; we assert the schema we
-depend on instead of inferring one (inference is nondeterministic at 100 TB).
-``Warehouse`` is the single entry point queries use — it pins session confs
-(session.prepare) and serves cached DataFrames per (session, sf_dir).
+A schema-less ``spark.read.parquet`` runs a Spark job that reads the
+files' footers to resolve the schema. ``Warehouse`` is the single entry
+point queries use — it pins session confs (session.prepare) and serves
+cached DataFrames per (session, sf_dir), so that job runs once per table
+per session; a ``load_table(fresh=True)`` scan reuses the schema the
+cached scan resolved and runs none.
 
 Scale notes (100 TB posture):
 - A production deployment points sf_dir at a partitioned lake path; the scan
@@ -83,7 +85,8 @@ def normalize_event_ts(df: DataFrame, col: str = "ts") -> DataFrame:
 # sessions release their plans. The cached plan snapshots the FILE LISTING:
 # if a fixture directory is rewritten mid-session (compaction, regenerated
 # test data), call evict_table_cache() first or the stale listing will
-# read missing/pre-rewrite files.
+# read missing/pre-rewrite files. Each entry is (the raw scan's schema, the
+# served plan); fresh scans read with that schema.
 _DF_CACHE: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
 
@@ -145,21 +148,23 @@ def load_table(
     """``fresh=True`` bypasses the cache and returns a new scan plan with
     its own attribute ids — required when a query must cogroup/self-join
     two branches of the same table (Spark rejects one shared plan as
-    ambiguous)."""
+    ambiguous). A fresh scan reads with the schema the session's cached
+    scan resolved, so it launches no footer-reading job."""
     if name not in TABLE_NAMES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLE_NAMES}")
     prepare(spark)  # timezone/nanos confs must be set before the read resolves
-    if fresh:
-        df = spark.read.parquet(path_for(sf_dir, name))
-        return normalize_event_ts(df) if name == "events" else df
+    path = path_for(sf_dir, name)
     per_session = _DF_CACHE.setdefault(spark, {})
     key = (os.path.abspath(sf_dir), name)
     if key not in per_session:
-        df = spark.read.parquet(path_for(sf_dir, name))
-        if name == "events":
-            df = normalize_event_ts(df)
-        per_session[key] = df
-    return per_session[key]
+        scan = spark.read.parquet(path)
+        df = normalize_event_ts(scan) if name == "events" else scan
+        per_session[key] = (scan.schema, df)
+    schema, df = per_session[key]
+    if not fresh:
+        return df
+    scan = spark.read.schema(schema).parquet(path)
+    return normalize_event_ts(scan) if name == "events" else scan
 
 
 class Warehouse:

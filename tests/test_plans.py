@@ -523,3 +523,104 @@ def test_substring_family_joins_are_sort_merge(spark, key):
     plan = plan_of(spark, key)
     assert "BroadcastExchange" not in plan, key
     assert "SortMergeJoin" in plan, key
+
+
+# Constant data stays on the JVM. A DataFrame built from a Python list is
+# a LogicalRDD whose scan runs one Python task per partition, even for
+# zero rows (~0.13 s each here before any work).
+
+
+def _leaves(df) -> list[str]:
+    return [
+        n.nodeName()
+        for n in _iter_nodes(df._jdf.queryExecution().optimizedPlan())
+        if n.children().size() == 0
+    ]
+
+
+def test_embcos_tile_keys_stay_in_plan(spark):
+    qe = registry.QUERIES["llm_dedup_embcos"](spark, SF_DIR)._jdf.queryExecution()
+    names = [n.nodeName() for n in _iter_nodes(qe.optimizedPlan())]
+    assert "LogicalRDD" not in names
+    python_nodes = [
+        n for n in names if "Pandas" in n or "Python" in n or "Arrow" in n
+    ]
+    assert python_nodes == ["FlatMapCoGroupsInPandas"]
+    assert "BroadcastExchange" not in qe.executedPlan().toString()
+
+
+def test_constant_tables_are_local_relations_or_derived(spark, tmp_path):
+    from flink_realtime_spark.llm.dedup import MinhashIndex
+    from flink_realtime_spark.llm.similarity import ivf_index
+    from flink_realtime_spark.operators.serving import _wm_row
+    from flink_realtime_spark.tables import load_table
+
+    emb = load_table(spark, SF_DIR, "embeddings")
+    for corpus in (emb, emb.limit(0)):  # fitted, and the empty-corpus case
+        _, centroids = ivf_index(corpus, 4)
+        assert _leaves(centroids) == ["LocalRelation"]
+        assert centroids.dtypes == [("cell", "int"), ("centroid", "array<double>")]
+
+    for wm in (1_700_000_000_000_000, None):
+        row = _wm_row(spark, wm)
+        assert _leaves(row) == ["Range"]
+        assert row.dtypes == [("wm_us", "bigint")]
+        assert [tuple(r) for r in row.collect()] == [(wm,)]
+
+    empty = MinhashIndex(spark, str(tmp_path))._read(
+        str(tmp_path / "missing"), "doc_id LONG, hs ARRAY<LONG>"
+    )
+    assert _leaves(empty) == ["LocalRelation"]
+    assert empty.dtypes == [("doc_id", "bigint"), ("hs", "array<bigint>")]
+    assert empty.collect() == []
+
+
+@pytest.mark.parametrize("name", ["embeddings", "events"])
+def test_fresh_scan_reuses_resolved_schema(spark, name):
+    """After one plain read, a fresh scan resolves its schema without a
+    Spark job (no footer read) and still gets its own attribute ids."""
+    from flink_realtime_spark.tables import load_table
+
+    cached = load_table(spark, SF_DIR, name)
+    sc = spark.sparkContext
+    group = f"fresh-scan-{name}"
+    sc.setJobGroup(group, "load_table(fresh=True)")
+    try:
+        fresh = load_table(spark, SF_DIR, name, fresh=True)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    assert fresh.schema == cached.schema
+
+    def ids(df):
+        out = df._jdf.queryExecution().analyzed().output()
+        return {out.apply(i).exprId().id() for i in range(out.size())}
+
+    assert not ids(fresh) & ids(cached)
+
+
+def test_no_python_list_create_dataframe():
+    """CI guard: no engine module builds a DataFrame from a Python list,
+    tuple or comprehension literal (the LogicalRDD path above)."""
+    import ast
+    import pathlib
+
+    import flink_realtime_spark
+
+    literal = (ast.List, ast.Tuple, ast.ListComp, ast.GeneratorExp, ast.SetComp)
+    root = pathlib.Path(flink_realtime_spark.__file__).parent
+    hits = []
+    for path in sorted(root.rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if not (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "createDataFrame"
+            ):
+                continue
+            data = node.args[0] if node.args else next(
+                (k.value for k in node.keywords if k.arg == "data"), None
+            )
+            if isinstance(data, literal):
+                hits.append(f"{path.relative_to(root.parent)}:{node.lineno}")
+    assert hits == []

@@ -26,6 +26,17 @@ def test_prepare_records_refused_conf(spark, monkeypatch):
     assert spark.conf.get(
         "spark.sql.sources.parallelPartitionDiscovery.threshold"
     ) == str(2**31 - 1)
+    # streaming checkpoints write through FileSystem, not FileContext
+    jvm = spark._jvm
+    cfm = jvm.org.apache.spark.sql.execution.streaming.checkpointing
+    manager = cfm.CheckpointFileManager.create(
+        jvm.org.apache.hadoop.fs.Path("file:///tmp"),
+        spark._jsparkSession.sessionState().newHadoopConf(),
+    )
+    assert (
+        manager.getClass().getSimpleName()
+        == "FileSystemBasedCheckpointFileManager"
+    )
 
 
 def test_ship_package_records_add_py_file_failure(spark, monkeypatch):

@@ -2255,6 +2255,58 @@ def test_state_change_feed_replays_to_latest(spark, chunked_events_dir, tmp_path
     assert replayed == snapshot
 
 
+
+def test_rocksdb_checkpoint_keeps_checksum_files(spark, chunked_events_dir, tmp_path):
+    """session.prepare pins the FileSystem checkpoint manager on a local
+    master (no forked readlink/chmod per file). Checksums must survive the
+    swap: Hadoop's .N.crc next to every offsets/commits file, and Spark's
+    N.changelog.crc next to every RocksDB changelog under state/."""
+    from flink_realtime_spark.session import prepare
+
+    provider_conf = "spark.sql.streaming.stateStore.providerClass"
+    old_provider = spark.conf.get(provider_conf, None)
+    prepare(spark)
+    staging = tmp_path / "staging"
+    staging.mkdir()
+    ckpt = tmp_path / "ckpt"
+    spark.conf.set(provider_conf, ROCKSDB)
+    try:
+        for i in range(2):
+            shutil.copy(f"{chunked_events_dir}/chunk{i}.parquet", staging)
+            sdf = file_stream_source(
+                spark, str(staging), EVENTS_DDL, max_files_per_trigger=1
+            )
+            (
+                sdf.groupBy("event_type")
+                .agg(F.count(F.lit(1)).alias("n"))
+                .writeStream.outputMode("update")
+                .format("noop")
+                .option("checkpointLocation", str(ckpt))
+                .trigger(availableNow=True)
+                .start()
+                .awaitTermination()
+            )
+    finally:
+        if old_provider is None:
+            spark.conf.unset(provider_conf)
+        else:
+            spark.conf.set(provider_conf, old_provider)
+
+    for log in ("offsets", "commits"):
+        files = set(os.listdir(ckpt / log))
+        batches = {f for f in files if f.isdigit()}
+        assert batches == {"0", "1"}
+        assert all(f".{n}.crc" in files for n in batches), (log, files)
+    changelogs = [
+        (root, f)
+        for root, _dirs, files in os.walk(ckpt / "state")
+        for f in files
+        if f.endswith(".changelog")
+    ]
+    assert changelogs
+    for root, f in changelogs:
+        assert os.path.exists(os.path.join(root, f + ".crc")), (root, f)
+
 def test_cep_absence_stream_matches_batch(spark, chunked_events_dir):
     """Quantified-negation CEP (Flink notFollowedBy + within): a
     prefix-matched click (view within 30 min before it) with no purchase
