@@ -1028,8 +1028,8 @@ def _large_star(adj: DataFrame) -> DataFrame:
     and Beyond"): every node connects its strictly-larger neighbors to the
     minimum of its closed neighborhood. One groupBy + one join, all keyed.
 
-    r12 NOTE (an explicit-repartition attempt was tried and REVERTED —
-    plan evidence in plans/r12/*_cc_star_round.txt): unlike _small_star,
+    r12 NOTE (an explicit-repartition attempt was tried and REVERTED on
+    a negative A/B, commit 12f6ee4): unlike _small_star,
     the two consumers here read DIFFERENT row sets (the min-aggregate
     needs the full neighborhood, the join-left only v > u), and Catalyst
     pushes the v > u filter below any shared repartition, so the two

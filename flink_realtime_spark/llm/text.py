@@ -46,7 +46,7 @@ def llm_text_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     UTF-8 byte lengths of the result — the two length units the uni tier
     proved engines disagree on when conflated. Every dedup/curation key
     builds on this fold; registering it directly gives the contract its
-    own driver hash, including over multilingual corpora (UNI_TIER).
+    own driver hash, including over multilingual corpora (the uni tier).
     Narrow map, zero shuffles, scan speed at any corpus size."""
     wh = Warehouse(spark, sf_dir)
     from flink_realtime_spark.exprs import norm_text

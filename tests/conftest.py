@@ -1,18 +1,18 @@
 """Shared fixtures: one SparkSession per test session, a DuckDB connection
-with the ten tables registered as views, and the differential comparator
-that replicates the driver's row-count + schema + order-insensitive
-value-hash check (SURVEY.md §5.1)."""
+with the ten tables registered as views, and the parity assertion over the
+driver's strict representation hash (flink_realtime_spark.strict_hash —
+the same hash tools/drive_driver.py and perfbench compare, so int vs
+float, "61" vs "61.0" and -0.0 vs 0.0 fail here too)."""
 
 from __future__ import annotations
 
-import math
 import os
 
 import duckdb
-import pandas as pd
 import pytest
 
 from flink_realtime_spark.session import get_spark
+from flink_realtime_spark.strict_hash import first_difference, frame_hash
 from flink_realtime_spark.tables import TABLE_NAMES
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.01")
@@ -38,44 +38,10 @@ def duck():
     con.close()
 
 
-def _normalize(df: pd.DataFrame) -> pd.DataFrame:
-    """Column-name-sorted, row-sorted, tz-stripped frame for comparison."""
-    df = df[sorted(df.columns)].copy()
-    for c in df.columns:
-        if pd.api.types.is_datetime64_any_dtype(df[c]):
-            dt = df[c]
-            if getattr(dt.dtype, "tz", None) is not None:
-                dt = dt.dt.tz_convert("UTC").dt.tz_localize(None)
-            df[c] = dt.astype("datetime64[us]")
-    key = df.astype(str)
-    order = key.sort_values(by=list(df.columns)).index
-    return df.loc[order].reset_index(drop=True)
-
-
-def assert_frames_match(spark_df: pd.DataFrame, oracle_df: pd.DataFrame, key: str):
-    assert len(spark_df) == len(oracle_df), (
-        f"{key}: row count {len(spark_df)} (spark) != {len(oracle_df)} (oracle)"
+def assert_strict_parity(key: str, scols, srows, ocols, orows) -> None:
+    """Spark's (columns, rows) and the oracle's hash equal; a failure shows
+    the first differing canonical line."""
+    assert frame_hash(scols, srows) == frame_hash(ocols, orows), (
+        f"{key}: strict hash differs\n"
+        + first_difference(scols, srows, ocols, orows)
     )
-    assert sorted(spark_df.columns) == sorted(oracle_df.columns), (
-        f"{key}: columns {sorted(spark_df.columns)} != {sorted(oracle_df.columns)}"
-    )
-    s, o = _normalize(spark_df), _normalize(oracle_df)
-    for c in s.columns:
-        sk, ok_ = s[c].dtype.kind, o[c].dtype.kind
-        assert sk == ok_, (
-            f"{key}.{c}: dtype kind mismatch spark={s[c].dtype} oracle={o[c].dtype}"
-            " (a strict value-hash would diverge on representation)"
-        )
-    for c in s.columns:
-        sv, ov = s[c].tolist(), o[c].tolist()
-        for i, (a, b) in enumerate(zip(sv, ov)):
-            a_null = a is None or (
-                not isinstance(a, (str, bytes, list, tuple)) and pd.isna(a)
-            )
-            b_null = b is None or (
-                not isinstance(b, (str, bytes, list, tuple)) and pd.isna(b)
-            )
-            if a_null or b_null:
-                assert a_null and b_null, f"{key}.{c}[{i}]: {a!r} != {b!r}"
-                continue
-            assert a == b, f"{key}.{c}[{i}]: spark={a!r} oracle={b!r} (Δ row {i})"

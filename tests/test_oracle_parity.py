@@ -1,15 +1,16 @@
 """Differential oracle parity — replicates the driver's CORRECTNESS check
 locally (SURVEY.md §5.1): for every registered query key with an oracle,
 run the Spark plan and the DuckDB SQL on the same sf0.01 parquet and demand
-exact value equality after column-name sort + row sort. Keys without an
-oracle get a rows-return smoke check here (driver runs rows-only too)."""
+equal strict representation hashes (flink_realtime_spark.strict_hash).
+Keys without an oracle get a rows-return smoke check here (driver runs
+rows-only too)."""
 
 from __future__ import annotations
 
 import pytest
 
 from flink_realtime_spark import registry
-from tests.conftest import SF_DIR, assert_frames_match
+from tests.conftest import SF_DIR, assert_strict_parity
 
 registry.load_all()
 
@@ -19,9 +20,11 @@ ROWS_ONLY_KEYS = sorted(k for k in registry.QUERIES if k not in registry.ORACLES
 
 @pytest.mark.parametrize("key", ORACLE_KEYS)
 def test_oracle_parity(spark, duck, key):
-    spark_pdf = registry.QUERIES[key](spark, SF_DIR).toPandas()
-    oracle_pdf = duck.execute(registry.ORACLES[key]).fetchdf()
-    assert_frames_match(spark_pdf, oracle_pdf, key)
+    sdf = registry.QUERIES[key](spark, SF_DIR)
+    srows = [tuple(r) for r in sdf.collect()]
+    cur = duck.execute(registry.ORACLES[key])
+    ocols = [d[0] for d in cur.description]
+    assert_strict_parity(key, sdf.columns, srows, ocols, cur.fetchall())
 
 
 @pytest.mark.parametrize("key", ROWS_ONLY_KEYS)
@@ -226,8 +229,6 @@ def test_explode_outer_null_text_oracle_agreement(spark, tmp_path):
     import duckdb
     import pandas as pd
 
-    from tests.conftest import assert_frames_match
-
     pdf = pd.DataFrame(
         {
             "doc_id": pd.Series([1, 2, 3], dtype="int64"),
@@ -239,21 +240,21 @@ def test_explode_outer_null_text_oracle_agreement(spark, tmp_path):
     )
     sf_dir = str(tmp_path)
     pdf.to_parquet(f"{sf_dir}/documents.parquet")
-    spark_pdf = registry.QUERIES["flatmap_explode_outer"](
-        spark, sf_dir
-    ).toPandas()
+    sdf = registry.QUERIES["flatmap_explode_outer"](spark, sf_dir)
+    srows = [tuple(r) for r in sdf.collect()]
     con = duckdb.connect()
     con.execute(
         "CREATE VIEW documents AS "
         f"SELECT * FROM read_parquet('{sf_dir}/documents.parquet')"
     )
-    oracle_pdf = con.execute(
-        registry.ORACLES["flatmap_explode_outer"]
-    ).fetchdf()
+    cur = con.execute(registry.ORACLES["flatmap_explode_outer"])
+    ocols, orows = [d[0] for d in cur.description], cur.fetchall()
     con.close()
     # all three outer paths present: real tokens, empty list, NULL list
-    assert set(spark_pdf["doc_id"]) == {1, 2, 3}
-    assert_frames_match(spark_pdf, oracle_pdf, "flatmap_explode_outer/null")
+    assert {r[sdf.columns.index("doc_id")] for r in srows} == {1, 2, 3}
+    assert_strict_parity(
+        "flatmap_explode_outer/null", sdf.columns, srows, ocols, orows
+    )
 
 
 def test_round_negative_zero_normalized(spark, duck):

@@ -3,11 +3,11 @@
 For each key: run N iterations against the noop sink (times the full
 computation of every column without sink cost — guide §1.4), print
 min/median, and optionally write the `.explain("formatted")` output to
-plans/r11/<key>_<tag>.txt so plan claims are reviewable without Spark.
+<plan-dir>/<key>_<tag>.txt so plan claims are reviewable without Spark.
 
 Usage:
   python tools/iso_bench.py KEY [KEY...] [--sf DIR] [--iters N]
-                            [--plan-tag before|after] [--plan-dir DIR]
+                            [--plan-tag before|after --plan-dir DIR]
                             [--count]
 
 --count uses df.count() as the action instead of the noop sink (the
@@ -31,7 +31,7 @@ def main() -> None:
     sf_dir = "/root/testdata/sf0.1"
     iters = 3
     plan_tag = None
-    plan_dir = "plans/r12"
+    plan_dir = None
     use_count = False
     keys: list[str] = []
     i = 0
@@ -56,6 +56,8 @@ def main() -> None:
             keys.append(a)
             i += 1
 
+    if plan_tag and not plan_dir:
+        raise SystemExit("--plan-tag needs --plan-dir")
     registry.load_all()
     spark = get_spark("iso-bench")
     for t in ("lineitem", "orders", "events", "documents", "embeddings"):
