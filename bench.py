@@ -1,10 +1,21 @@
 """Headline benchmark — prints ONE JSON line the driver records per round.
 
-Runs the headline query keys at $SPARK_GRAFT_SF_DIR (default
-/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS]. Per-query time is the
-wall time of executing the DataFrame plan and materializing the (small
-aggregated) result; Spark session startup is excluded, a single warm-up
-count ensures codegen/classloading doesn't bill the first query.
+Usage: python bench.py [KEY ...]
+
+With no arguments it times the HEADLINE keys (the driver contract); with
+arguments it times exactly those registered keys, in the order given. An
+unknown key exits non-zero, naming it, before Spark starts. Keys run at
+$SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
+local[$SPARK_GRAFT_CPUS], each $SPARK_GRAFT_BENCH_ITERS times (default 3).
+Per-query time is the wall time of building the DataFrame plan, executing
+it and materializing the (small aggregated) result with count(); Spark
+session startup is excluded, and one warm-up count per key at sf0.001
+keeps codegen/classloading off the first measured run.
+
+Full-registry sweep (one run per key; the stdout line outgrows the
+driver's 2 KB tail, so read the per-key stderr lines):
+
+    SPARK_GRAFT_BENCH_ITERS=1 python bench.py $(python -c "from flink_realtime_spark import registry; registry.load_all(); print(*sorted(registry.QUERIES))")
 """
 
 from __future__ import annotations
@@ -18,11 +29,11 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from flink_realtime_spark import registry
 from flink_realtime_spark.session import REFUSED_CONFS, get_spark
+from perfbench.measure import calibrate_ms
 
-# Headline set: one representative per major category (keys missing from the
-# registry — not yet implemented this round — are skipped silently), PLUS
-# each family's WORST-case key (BASELINE.md per-family table) so the
-# per-round artifact captures tail regressions, not just the fast paths.
+# Headline set: one representative per major category, PLUS each family's
+# WORST-case key (BASELINE.md per-family table) so the per-round artifact
+# captures tail regressions, not just the fast paths.
 HEADLINE = [
     "agg_star_flagship",
     "agg_groupby_basic",
@@ -83,6 +94,18 @@ HEADLINE = [
 STREAM_EXEC = {"src_stream_smoke", "sink_upsert_latest", "state_change_feed"}
 
 
+def select_keys(args: list[str]) -> list[str]:
+    """The keys to time: HEADLINE when ``args`` is empty, else ``args`` in
+    the order given. Every key must be registered; an unknown one raises
+    SystemExit naming it, before Spark starts."""
+    keys = args or HEADLINE
+    registry.load_all()
+    unknown = [k for k in keys if k not in registry.QUERIES]
+    if unknown:
+        raise SystemExit(f"bench.py: unknown query key(s): {' '.join(unknown)}")
+    return keys
+
+
 def warmup_failure(key: str, exc: Exception) -> tuple[str, str]:
     """(key, "ExcType: first line of the message") for a headline key whose
     warm-up raised, printed as one `# warm-up failed:` stderr line, so a
@@ -92,22 +115,31 @@ def warmup_failure(key: str, exc: Exception) -> tuple[str, str]:
     return key, reason
 
 
-def sidecar(spread: dict, warmup_failures: list, payload: dict) -> dict:
+def sidecar(
+    spread: dict, warmup_failures: list, calib_ms: list, payload: dict
+) -> dict:
     """The /tmp sidecar record: the stdout payload plus the [min, max]
-    envelopes, the warm-up failures and the (conf, reason) pairs the
-    session refused to pin (session.REFUSED_CONFS)."""
+    envelopes, the warm-up failures, the quiet-box calibration [before,
+    after] (perfbench.measure.calibrate_ms) and the (conf, reason) pairs
+    the session refused to pin (session.REFUSED_CONFS)."""
     return {
         "spread": spread,
         "warmup_failures": warmup_failures,
+        "calib_ms": calib_ms,
         "refused_confs": [list(p) for p in REFUSED_CONFS],
         **payload,
     }
 
 
 def main() -> None:
+    keys = select_keys(sys.argv[1:])
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-    registry.load_all()
+    iters = int(os.environ.get("SPARK_GRAFT_BENCH_ITERS", "3"))
+    # Quiet-box sentinel: a fixed Spark-free work unit timed before the
+    # first warm-up and after the last key. Uniform CPU steal inflates
+    # both, which the per-key spread guard below cannot see.
+    calib_before = calibrate_ms()
     spark = get_spark("flink-realtime-spark-bench")
     # Warm up the engine off the clock: parquet footers at the bench SF, and
     # one tiny end-to-end query (sf0.001) to JIT the codegen compiler,
@@ -115,19 +147,16 @@ def main() -> None:
     # warm. Measured queries still do all their own IO/planning/execution.
     for t in ("lineitem", "orders", "events", "documents", "embeddings"):
         spark.read.parquet(os.path.join(sf_dir, f"{t}.parquet")).count()
-    # Warm every headline plan once at sf0.001 (trivial data): generated
+    # Warm every timed plan once at sf0.001 (trivial data): generated
     # whole-stage-codegen classes are keyed by plan shape, not data
     # location, so this pre-compiles/JITs each query's code paths the way
     # a continuously-serving engine would have them. The measured sf runs
     # below still perform all of their own analysis, optimization,
     # scheduling, IO and execution.
     warmup_failures = []
-    for key in HEADLINE:
-        fn = registry.QUERIES.get(key)
-        if fn is None:
-            continue
+    for key in keys:
         try:
-            fn(spark, "/root/testdata/sf0.001").count()
+            registry.QUERIES[key](spark, "/root/testdata/sf0.001").count()
         except Exception as e:
             warmup_failures.append(warmup_failure(key, e))
 
@@ -138,13 +167,10 @@ def main() -> None:
     # the per-key series stays comparable with r01–r04 single-shot
     # numbers), `spread` the [min, max] envelope, and the totals are
     # sums of medians.
-    iters = int(os.environ.get("SPARK_GRAFT_BENCH_ITERS", "3"))
     times: dict[str, float] = {}
     spread: dict[str, list[float]] = {}
-    for key in HEADLINE:
-        fn = registry.QUERIES.get(key)
-        if fn is None:
-            continue
+    for key in keys:
+        fn = registry.QUERIES[key]
         samples: list[float] = []
         n = 0
         for _ in range(iters):
@@ -205,16 +231,11 @@ def main() -> None:
     if noisy:
         print(
             f"# WARNING: spread max/min > 5x on {sorted(noisy)} — "
-            "likely machine contention during this run; prefer the "
-            "median-of-iso re-run before reading regressions from it",
+            "likely machine contention during this run; re-run those "
+            "keys (python bench.py KEY ...) before reading regressions "
+            "from it",
             file=sys.stderr,
         )
-    try:
-        with open("/tmp/spark_graft_bench_spread.json", "w") as fh:
-            json.dump(sidecar(spread, warmup_failures, payload), fh)
-    except OSError:
-        pass  # sidecar is best-effort; the stdout contract is the artifact
-
     # The payload line must be the LAST thing on stdout (the driver
     # tail-captures ~2 KB and parses the last line). Round 7 lost its
     # bench artifact because spark.stop() ran AFTER the print and the
@@ -228,6 +249,17 @@ def main() -> None:
         pass  # no StateStores registered (or API drift): nothing to quiesce
     spark.stop()
     time.sleep(1.0)
+    # The closing calibration runs with Spark stopped, like the opening
+    # one: inside a live session the same work unit read 95-119 ms against
+    # 66-72 ms after stop (4 cores), so a live reading would show the JVM,
+    # not the box drift the pair is there to show.
+    calib_ms = [round(calib_before, 1), round(calibrate_ms(), 1)]
+    print(f"# calib_ms before {calib_ms[0]} after {calib_ms[1]}", file=sys.stderr)
+    try:
+        with open("/tmp/spark_graft_bench_spread.json", "w") as fh:
+            json.dump(sidecar(spread, warmup_failures, calib_ms, payload), fh)
+    except OSError:
+        pass  # sidecar is best-effort; the stdout contract is the artifact
     sys.stderr.flush()
     print(json.dumps(payload))
     sys.stdout.flush()

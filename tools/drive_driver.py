@@ -47,7 +47,7 @@ TIERS = {
     # instrument's collect. Excluded, with reasons:
     # - streaming-exec keys (state_*, src_*, sink_*, mv_incremental_refresh's
     #   changelog store build) — checkpoint machinery over 10M events is a
-    #   separate stream_bench-measured axis;
+    #   separate axis (tools/stream_bench.py, perfbench's stream_ods_ads);
     # - join_interval_time / join_window_tvf / ads_time_to_convert /
     #   agg_funnel_window etc. whose OUTPUT fans out quadratically under
     #   fact replication (every (click, view-in-interval) pair multiplies

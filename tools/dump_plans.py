@@ -1,9 +1,11 @@
 """Generate PLANS.md: a per-query physical-plan audit.
 
 For every registered query key, records the plan's scale-relevant traits —
-join strategies chosen, number of exchanges, whether parquet filters/
-partition pruning applied, codegen coverage — so the 100 TB posture is
-reviewable at a glance without re-running anything.
+join strategies chosen, number of exchanges and of reused exchanges,
+whether parquet filters/partition pruning applied, codegen coverage — so
+the 100 TB posture is reviewable at a glance without re-running anything.
+The executed plan is read through perfbench.sparkstats, the reader the
+traced benchmark uses.
 
 Usage: python tools/dump_plans.py [sf_dir]  (writes PLANS.md at repo root)
 """
@@ -20,6 +22,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from flink_realtime_spark import registry
 from flink_realtime_spark.session import get_spark
+from perfbench.sparkstats import final_plan, plan_exchange_counts
 
 
 def count_partitionless_windows(df) -> int:
@@ -43,30 +46,31 @@ def count_partitionless_windows(df) -> int:
 
 
 def plans_of(df) -> tuple[str, str]:
-    """(formatted pre-exec plan, executed final adaptive plan).
+    """(formatted pre-exec plan, executed adaptive plan).
 
     The formatted explain carries full scan detail (PushedFilters,
     ReadSchema). The final plan only exists after executing THIS df (AQE
     finalizes per-query-execution; running .count() finalizes a different
-    plan), and is where runtime join choices, coalesced shuffle reads and
-    WholeStageCodegen `*(n)` spans show up."""
+    plan), and is where runtime join choices, coalesced shuffle reads,
+    reused exchanges and WholeStageCodegen `*(n)` spans show up."""
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
         df.explain("formatted")
     df.collect()
-    final = df._jdf.queryExecution().executedPlan().toString()
-    final = final.split("== Initial Plan ==")[0]
-    return buf.getvalue(), final
+    return buf.getvalue(), final_plan(df)
 
 
-def audit(formatted: str, final: str) -> dict:
+def audit(formatted: str, plan: str) -> dict:
+    exchanges, reused = plan_exchange_counts(plan)
+    # joins, aggregates and codegen spans count in the final plan only,
+    # the part above the adaptive plan's `== Initial Plan ==` echo
+    final = plan.split("== Initial Plan ==", 1)[0]
     joins = []
     for j in ["BroadcastHashJoin", "SortMergeJoin", "ShuffledHashJoin",
               "BroadcastNestedLoopJoin", "CartesianProduct"]:
         n = len(re.findall(rf"\b{j}\b", final))
         if n:
             joins.append(f"{j}×{n}")
-    exchanges = len(re.findall(r"\bExchange (hash|range|Single)", final))
     scans = len(re.findall(r"^\(\d+\) Scan parquet", formatted, re.M))
     pushed = sum(
         1 for l in formatted.splitlines()
@@ -77,6 +81,7 @@ def audit(formatted: str, final: str) -> dict:
     return {
         "joins": ", ".join(joins) or "—",
         "exchanges": exchanges,
+        "reused": reused,
         "scans": scans,
         "pushed": pushed,
         "codegen": codegen,
@@ -100,15 +105,20 @@ def main() -> None:
             skipped.append((key, str(e).splitlines()[0][:80]))
             continue
         rows.append(
-            f"| `{key}` | {a['joins']} | {a['exchanges']} | {a['scans']} "
-            f"| {a['pushed']} | {a['aggs']} | {a['codegen']} | {a['pwin']} |"
+            f"| `{key}` | {a['joins']} | {a['exchanges']} | {a['reused']} "
+            f"| {a['scans']} | {a['pushed']} | {a['aggs']} | {a['codegen']} "
+            f"| {a['pwin']} |"
         )
     out = [
         "# PLANS — physical-plan audit (generated by tools/dump_plans.py)",
         "",
         f"Audited at `{sf_dir}` from the EXECUTED final adaptive plan",
         "(runtime join choices + codegen only exist post-AQE). Columns:",
-        "join strategies, exchange (shuffle) count, parquet scans, scans",
+        "join strategies, exch = exchanges, shuffle AND broadcast",
+        "(perfbench.sparkstats.plan_exchange_counts; a ReusedExchange line",
+        "names the exchange it reads, so it counts here too), reused =",
+        "ReusedExchange nodes (an exchange computed once, read again),",
+        "parquet scans, scans",
         "with non-empty PushedFilters, HashAggregate nodes (≥2 ⇒",
         "partial/final split), WholeStageCodegen `*(n)` spans, and pwin =",
         "partition-less Window nodes (single-task global order; ZERO",
@@ -119,8 +129,8 @@ def main() -> None:
         "execute a streaming query or train an estimator during plan",
         "construction are listed below the table.",
         "",
-        "| query key | joins | exch | scans | pushed | aggs | wscg | pwin |",
-        "|---|---|---|---|---|---|---|---|",
+        "| query key | joins | exch | reused | scans | pushed | aggs | wscg | pwin |",
+        "|---|---|---|---|---|---|---|---|---|",
         *rows,
         "",
     ]

@@ -4,7 +4,7 @@ forward/nearest (every click precedes the single purchase, so the whole
 fact volume sits in one key's state array before one flush)."""
 import os, sys, time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F
 
 from flink_realtime_spark.session import get_spark
