@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from flink_realtime_spark.exprs import finite_sql
 from flink_realtime_spark.registry import query
 from flink_realtime_spark.tables import Warehouse
+from flink_realtime_spark.worker import crossing
 
 
 def _net_price_batches(batches):
@@ -65,7 +66,7 @@ def _net_price_batches(batches):
 def udf_scalar_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
     wh = Warehouse(spark, sf_dir)
     return wh.lineitem.filter(F.col("l_quantity") >= 45).mapInArrow(
-        _net_price_batches,
+        crossing(_net_price_batches),
         "l_orderkey BIGINT, l_linenumber INT, net_price DOUBLE",
     )
 
@@ -75,6 +76,7 @@ def _median_udaf():
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("double")
+    @crossing
     def median_agg(v: pd.Series) -> float:
         # Grouped-aggregate pandas UDF (Flink AggregateFunction analog).
         # Median is order-insensitive → deterministic across batchings.
@@ -115,6 +117,7 @@ def _split_words_udtf():
     class SplitWords:
         # Table function (Flink TableFunction / LATERAL analog):
         # one input string → N (word, position) rows.
+        @crossing
         def eval(self, text: str):
             # NULL text → no rows, matching unnest(str_split(NULL, ' '))
             # in SQL (nulls-tier find: .split on None raised).

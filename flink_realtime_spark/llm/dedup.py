@@ -37,6 +37,7 @@ from flink_realtime_spark.exprs import (
 )
 from flink_realtime_spark.registry import query
 from flink_realtime_spark.tables import Warehouse, rebalance
+from flink_realtime_spark.worker import crossing
 
 # Normalized text: lowercase, collapsed whitespace, trimmed, with the
 # cross-engine case-mapping mines canonicalized (exprs.py — uni-tier r09).
@@ -505,7 +506,9 @@ def llm_dedup_embcos(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         left.groupBy("pk")
         .cogroup(right.groupBy("pk"))
-        .applyInPandas(tile_gemm, "vec_a long, vec_b long, cos_sim double")
+        .applyInPandas(
+            crossing(tile_gemm), "vec_a long, vec_b long, cos_sim double"
+        )
     )
 
 
@@ -1442,7 +1445,7 @@ def llm_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     return e.groupBy("label").applyInPandas(
-        per_cluster, "vec_a long, vec_b long, label long, cos_sim double"
+        crossing(per_cluster), "vec_a long, vec_b long, label long, cos_sim double"
     )
 
 

@@ -27,9 +27,9 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from flink_realtime_spark.llm.dedup import cosine_expr
 from flink_realtime_spark.registry import query
 from flink_realtime_spark.tables import Warehouse
+from flink_realtime_spark.worker import crossing
 
 
 @query(
@@ -163,7 +163,7 @@ def llm_media_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     plumbing — not just the stub arithmetic — is hash-checked."""
     wh = Warehouse(spark, sf_dir)
     with_media = fake_media_column(wh.documents.select("doc_id", "text"))
-    return with_media.mapInPandas(decode_media(), _DECODE_SCHEMA)
+    return with_media.mapInPandas(crossing(decode_media()), _DECODE_SCHEMA)
 
 
 @query(
@@ -194,20 +194,3 @@ def llm_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_frames.alias("n_frames"),
     )
 
-
-def media_text_alignment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bonus composition: media metadata joined back to text stats and
-    embeddings — three modalities in one relation (used by tests)."""
-    wh = Warehouse(spark, sf_dir)
-    meta = llm_media_meta(spark, sf_dir)
-    return (
-        meta.join(wh.documents.select("doc_id", "lang", "n_chars"), "doc_id")
-        .join(
-            wh.embeddings.select(
-                F.col("vec_id").alias("doc_id"),
-                F.col("embedding").cast("array<double>").alias("emb"),
-            ),
-            "doc_id",
-        )
-        .withColumn("self_sim", cosine_expr("emb", "emb"))
-    )

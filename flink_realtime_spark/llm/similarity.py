@@ -19,6 +19,7 @@ from flink_realtime_spark.exprs import nonfinite, nonfinite_sql
 from flink_realtime_spark.llm.dedup import cosine_expr
 from flink_realtime_spark.registry import query
 from flink_realtime_spark.tables import Warehouse, rebalance
+from flink_realtime_spark.worker import crossing
 
 K = 5
 N_QUERIES = 20
@@ -572,7 +573,7 @@ def ivf_topk_gemm(
         return out[out["sim"] != -np.inf]
 
     cand = probes.groupBy("cell").cogroup(members.groupBy("cell")).applyInPandas(
-        cell_topk, "query_id LONG, neighbor_id LONG, sim DOUBLE"
+        crossing(cell_topk), "query_id LONG, neighbor_id LONG, sim DOUBLE"
     )
     w = Window.partitionBy("query_id").orderBy(
         F.col("sim").desc(), F.col("neighbor_id").asc()

@@ -25,6 +25,7 @@ from flink_realtime_spark.plans.asof import asof_join
 from flink_realtime_spark.plans.rangejoin import binned_range_join
 from flink_realtime_spark.registry import query
 from flink_realtime_spark.tables import Warehouse
+from flink_realtime_spark.worker import crossing
 
 
 @query(
@@ -502,7 +503,7 @@ def cogroup_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         ev.groupBy("user_id")
         .cogroup(od.groupBy("o_custkey"))
-        .applyInArrow(_cogroup_profile, _COGROUP_SCHEMA)
+        .applyInArrow(crossing(_cogroup_profile), _COGROUP_SCHEMA)
     )
 
 

@@ -31,6 +31,7 @@ from pyspark.sql.types import TimestampNTZType, TimestampType
 from flink_realtime_spark.exprs import epoch_us
 from flink_realtime_spark.registry import query
 from flink_realtime_spark.tables import Warehouse
+from flink_realtime_spark.worker import crossing
 
 # state/output schemas per stateful function: static fns are added in one
 # update() block below; factory-built fns register their instances at
@@ -923,7 +924,7 @@ def apply_with_state(
         cols.append(group.alias("__key_group"))
         key = "__key_group"
     return sdf.select(*cols).groupBy(key).applyInPandasWithState(
-        state_fn,
+        crossing(state_fn),
         outputStructType=output_schema,
         stateStructType=state_schema,
         outputMode=output_mode,

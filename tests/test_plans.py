@@ -624,3 +624,97 @@ def test_no_python_list_create_dataframe():
             if isinstance(data, literal):
                 hits.append(f"{path.relative_to(root.parent)}:{node.lineno}")
     assert hits == []
+
+
+_CROSSING_CALLS = {
+    "applyInPandas", "applyInArrow", "mapInPandas", "mapInArrow",
+    "applyInPandasWithState",
+}
+_UDF_FACTORIES = {"pandas_udf", "udtf", "udf"}
+
+
+def _unwrapped_crossings(source: str) -> list[int]:
+    """Lines where a function handed to a Python worker skips
+    worker.crossing: the first argument of a _CROSSING_CALLS call is not
+    a ``crossing(...)`` call, a ``@pandas_udf``/``@udf`` def lacks
+    ``@crossing``, a ``@udtf`` class's ``eval`` lacks it, or a UDF
+    factory is called directly on anything but ``crossing(...)``."""
+    import ast
+
+    def name(node):
+        node = node.func if isinstance(node, ast.Call) else node
+        return getattr(node, "attr", getattr(node, "id", None))
+
+    def is_crossing(node):
+        return isinstance(node, ast.Call) and name(node) == "crossing"
+
+    tree = ast.parse(source)
+    decorators = {
+        id(d)
+        for n in ast.walk(tree)
+        for d in getattr(n, "decorator_list", ())
+    }
+    hits = []
+    for node in ast.walk(tree):
+        decos = {name(d) for d in getattr(node, "decorator_list", ())}
+        if isinstance(node, ast.Call) and id(node) not in decorators:
+            fn = node.args[0] if node.args else next(
+                (k.value for k in node.keywords if k.arg in ("func", "f")), None
+            )
+            if name(node) in _CROSSING_CALLS | _UDF_FACTORIES and not is_crossing(fn):
+                hits.append(node.lineno)
+        elif isinstance(node, ast.FunctionDef) and decos & _UDF_FACTORIES:
+            if "crossing" not in decos:
+                hits.append(node.lineno)
+        elif isinstance(node, ast.ClassDef) and decos & _UDF_FACTORIES:
+            evals = [
+                b for b in node.body
+                if isinstance(b, ast.FunctionDef) and b.name == "eval"
+            ]
+            if not evals or "crossing" not in {name(d) for d in evals[0].decorator_list}:
+                hits.append(node.lineno)
+    return sorted(hits)
+
+
+def test_crossing_guard_flags_unwrapped_functions():
+    bad = (
+        "df.mapInPandas(fn, schema)\n"
+        "g.applyInPandasWithState(state_fn, outputStructType=o)\n"
+        "cg.applyInArrow(func=fn, schema=s)\n"
+        "@pandas_udf('double')\n"
+        "def f(v): ...\n"
+        "@udtf(returnType='w string')\n"
+        "class T:\n"
+        "    def eval(self, t): ...\n"
+        "u = pandas_udf(f, 'double')\n"
+    )
+    assert _unwrapped_crossings(bad) == [1, 2, 3, 5, 7, 9]
+    good = (
+        "df.mapInPandas(crossing(fn), schema)\n"
+        "cg.applyInArrow(func=crossing(fn), schema=s)\n"
+        "@pandas_udf('double')\n"
+        "@crossing\n"
+        "def f(v): ...\n"
+        "@udtf(returnType='w string')\n"
+        "class T:\n"
+        "    @crossing\n"
+        "    def eval(self, t): ...\n"
+    )
+    assert _unwrapped_crossings(good) == []
+
+
+def test_python_crossings_install_worker_memo():
+    """CI guard: every engine function that runs in a Python worker goes
+    through flink_realtime_spark.worker.crossing, whose first call there
+    stops pyspark's per-task archive re-reads (~0.2 s a task)."""
+    import pathlib
+
+    import flink_realtime_spark
+
+    root = pathlib.Path(flink_realtime_spark.__file__).parent
+    hits = [
+        f"{path.relative_to(root.parent)}:{line}"
+        for path in sorted(root.rglob("*.py"))
+        for line in _unwrapped_crossings(path.read_text())
+    ]
+    assert hits == []
