@@ -27,6 +27,8 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -42,6 +44,7 @@ from flink_realtime_spark.exprs import (
     nonfinite,
     nonfinite_sql,
 )
+from flink_realtime_spark.plans.layout import recover_dir, replace_dir
 from flink_realtime_spark.registry import query
 from flink_realtime_spark.tables import Warehouse
 
@@ -241,23 +244,17 @@ def mv_merge(cur: DataFrame, delta: DataFrame) -> DataFrame:
     )
 
 
-def _recover_interrupted_swap(mv_dir: str) -> None:
-    """Recover a swap interrupted by a HARD crash (SIGKILL/power loss):
-    the in-process try/except below can't run then, and the store may be
-    left with state only in ``.old`` (between rename(mv->old) and
-    rename(tmp->mv)). Without this, the next batch's isdir(mv_dir) check
-    would silently REINITIALIZE the MV from that batch's partials — total
-    state loss. Called at the top of every fold and every read."""
-    import os
-    import shutil
-
-    old = mv_dir + ".old"
-    if not os.path.isdir(mv_dir) and os.path.isdir(old):
-        os.rename(old, mv_dir)
-        # A leftover .tmp (the write that never got renamed in) is partial
-        # output from the interrupted batch; the checkpoint will replay
-        # that batch, so drop it.
-        shutil.rmtree(mv_dir + ".tmp", ignore_errors=True)
+def _mv_fold(batch_df: DataFrame, mv_dir: str) -> tuple[DataFrame | None, DataFrame]:
+    """The stored partial states (None before the first batch) and their
+    fold with this micro-batch's partials. Recovers a swap a hard crash
+    interrupted first: reading a store stranded in ``.old`` as absent
+    would silently reinitialize the MV from this batch alone."""
+    recover_dir(mv_dir)
+    delta = mv_partial_events(batch_df)
+    if not os.path.isdir(mv_dir):
+        return None, delta
+    cur = batch_df.sparkSession.read.schema(MV_STATE_DDL).parquet(mv_dir)
+    return cur, mv_merge(cur, delta)
 
 
 def mv_stream_writer(stream_df: DataFrame, mv_dir: str):
@@ -272,18 +269,10 @@ def mv_stream_writer(stream_df: DataFrame, mv_dir: str):
     idempotent; the parquet-swap form here has the same plan shape but
     at-least-once folding on retry (fine for the bounded replay tests, not
     for production)."""
-    import os
 
     def _fb(batch_df: DataFrame, _batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        _recover_interrupted_swap(mv_dir)
-        delta = mv_partial_events(batch_df)
-        if os.path.isdir(mv_dir):
-            cur = spark.read.schema(MV_STATE_DDL).parquet(mv_dir)
-            merged = mv_merge(cur, delta)
-        else:
-            merged = delta
-        _swap_in(merged, mv_dir)
+        _, merged = _mv_fold(batch_df, mv_dir)
+        replace_dir(mv_dir, merged.coalesce(1).write.mode("overwrite").parquet)
 
     return stream_df.writeStream.foreachBatch(_fb)
 
@@ -291,7 +280,7 @@ def mv_stream_writer(stream_df: DataFrame, mv_dir: str):
 def mv_serve(spark: SparkSession, mv_dir: str) -> DataFrame:
     """Serve the MV: derive AVG from the stored commutative partials (the
     reason the MV stores sums and counts, never finished averages)."""
-    _recover_interrupted_swap(mv_dir)
+    recover_dir(mv_dir)
     mv = spark.read.schema(MV_STATE_DDL).parquet(mv_dir)
     return mv.select(
         "d",
@@ -374,46 +363,16 @@ def mv_stream_writer_with_changelog(
     swap (same order a transactional sink would use: emit, then commit
     state); a replayed batch re-emits its diff — at-least-once, absorbed
     by the changelog's (op, batch_id, key) identity downstream."""
-    import os
 
     def _fb(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        _recover_interrupted_swap(mv_dir)
-        delta = mv_partial_events(batch_df)
-        if os.path.isdir(mv_dir):
-            cur = spark.read.schema(MV_STATE_DDL).parquet(mv_dir)
-            merged = mv_merge(cur, delta)
-        else:
-            cur = None
-            merged = delta
+        cur, merged = _mv_fold(batch_df, mv_dir)
         merged = merged.localCheckpoint(eager=True)  # diff + swap read it
         mv_changelog_diff(cur, merged, batch_id).write.mode("append").parquet(
             changelog_dir
         )
-        _swap_in(merged, mv_dir)
+        replace_dir(mv_dir, merged.coalesce(1).write.mode("overwrite").parquet)
 
     return stream_df.writeStream.foreachBatch(_fb)
-
-
-def _swap_in(merged: DataFrame, mv_dir: str) -> None:
-    """The mv_stream_writer swap, shared: write aside, rename over, with
-    the .old crash window covered by _recover_interrupted_swap."""
-    import os
-    import shutil
-
-    tmp = mv_dir + ".tmp"
-    merged.coalesce(1).write.mode("overwrite").parquet(tmp)
-    old = mv_dir + ".old"
-    shutil.rmtree(old, ignore_errors=True)
-    if os.path.isdir(mv_dir):
-        os.rename(mv_dir, old)
-    try:
-        os.rename(tmp, mv_dir)
-    except BaseException:
-        if os.path.isdir(old):
-            os.rename(old, mv_dir)
-        raise
-    shutil.rmtree(old, ignore_errors=True)
 
 
 # ---- streaming late-refire reconciliation -------------------------------
@@ -473,12 +432,10 @@ def _refire_delta(batch_df: DataFrame, wm_us: int | None) -> DataFrame:
 def late_refire_stream_writer(stream_df: DataFrame, store_dir: str):
     """foreachBatch incremental Lambda reconciliation; caller adds
     trigger/checkpoint and start()s. Serve with late_refire_serve."""
-    import os
-    import shutil
 
     def _fb(batch_df: DataFrame, _batch_id: int) -> None:
         spark = batch_df.sparkSession
-        _recover_interrupted_swap(store_dir)
+        recover_dir(store_dir)
         win_dir = os.path.join(store_dir, "windows")
         wm_dir = os.path.join(store_dir, "wm")
         wm_us = None
@@ -510,21 +467,12 @@ def late_refire_stream_writer(stream_df: DataFrame, store_dir: str):
         new_wm = max(x for x in (wm_us, batch_max) if x is not None) if (
             wm_us is not None or batch_max is not None
         ) else None
-        tmp = store_dir + ".tmp"
-        shutil.rmtree(tmp, ignore_errors=True)
-        merged.coalesce(1).write.parquet(os.path.join(tmp, "windows"))
-        _wm_row(spark, new_wm).write.parquet(os.path.join(tmp, "wm"))
-        old = store_dir + ".old"
-        shutil.rmtree(old, ignore_errors=True)
-        if os.path.isdir(store_dir):
-            os.rename(store_dir, old)
-        try:
-            os.rename(tmp, store_dir)
-        except BaseException:
-            if os.path.isdir(old):
-                os.rename(old, store_dir)
-            raise
-        shutil.rmtree(old, ignore_errors=True)
+
+        def write(staging: str) -> None:
+            merged.coalesce(1).write.parquet(os.path.join(staging, "windows"))
+            _wm_row(spark, new_wm).write.parquet(os.path.join(staging, "wm"))
+
+        replace_dir(store_dir, write)
 
     return stream_df.writeStream.foreachBatch(_fb)
 
@@ -532,9 +480,7 @@ def late_refire_stream_writer(stream_df: DataFrame, store_dir: str):
 def late_refire_serve(spark: SparkSession, store_dir: str) -> DataFrame:
     """Serve the reconciled window board: both panes as doubles plus the
     corrected flag — the same shape win_late_refire emits in batch."""
-    import os
-
-    _recover_interrupted_swap(store_dir)
+    recover_dir(store_dir)
     st = spark.read.schema(REFIRE_STATE_DDL).parquet(
         os.path.join(store_dir, "windows")
     )

@@ -13,13 +13,60 @@ layout is chosen for the downstream read pattern:
   NO exchange on either side — at 100 TB this turns the nightly
   fact-to-fact join from the dominant shuffle into a local zip.
   (Bucketing requires the table catalog: saveAsTable, not plain paths.)
+- ``replace_dir`` / ``recover_dir``: the one crash-safe directory swap
+  every store the engine rewrites goes through (the upsert sink, the MV
+  and late-refire stores, compaction).
 
-tests/test_layout.py asserts both properties against the actual plans.
+tests/test_layout.py asserts both properties against the actual plans,
+and the swap's behaviour in every post-crash directory state.
 """
 
 from __future__ import annotations
 
+import os
+import shutil
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession
+
+
+def recover_dir(path: str) -> None:
+    """Undo what a hard crash (SIGKILL/power loss) inside ``replace_dir``
+    left behind, where its in-process rollback never ran. If ``path`` is
+    gone, the only complete copy is ``path.old``: rename it back, or the
+    store would silently reinitialize from the next batch alone. Any
+    staging dir is a partial write of the interrupted batch (the streaming
+    checkpoint replays it) and any ``.old`` next to a complete ``path`` is
+    the previous state, so both are dropped. Call it before reading the
+    store, from the store's single writer process."""
+    path = path.rstrip("/")
+    if not os.path.isdir(path) and os.path.isdir(path + ".old"):
+        os.rename(path + ".old", path)
+    shutil.rmtree(path + ".staging", ignore_errors=True)
+    shutil.rmtree(path + ".old", ignore_errors=True)
+
+
+def replace_dir(path: str, write: Callable[[str], None]) -> None:
+    """Replace the directory ``path`` with what ``write(staging)`` writes
+    into a sibling staging dir, by two renames on one filesystem (path
+    aside, staging in). ``path`` is never deleted before the new copy is
+    in place, so a crash at any point leaves a complete copy that
+    ``recover_dir`` restores; an exception (any ``BaseException``) rolls
+    the renames back in process. On a real lake the table format's commit
+    protocol (Delta/Iceberg) takes this role."""
+    path = path.rstrip("/")
+    staging, old = path + ".staging", path + ".old"
+    shutil.rmtree(staging, ignore_errors=True)
+    write(staging)
+    shutil.rmtree(old, ignore_errors=True)
+    try:
+        if os.path.isdir(path):
+            os.rename(path, old)
+        os.rename(staging, path)
+    except BaseException:
+        recover_dir(path)
+        raise
+    shutil.rmtree(old, ignore_errors=True)
 
 
 def write_partitioned_layer(
@@ -45,6 +92,7 @@ def write_bucketed_table(
 
 
 def read_layer(spark: SparkSession, path: str) -> DataFrame:
+    recover_dir(path)
     return spark.read.parquet(path)
 
 
@@ -56,29 +104,13 @@ def compact_layer(
     5-minute triggers is ~10k files whose open/footer cost dominates reads).
     Rewrites the dataset into ``target_files`` files, optionally
     sort-within-partition on the hot filter/join key so row-group min/max
-    pruning works on point lookups. The compacted output is written to a
-    sibling directory on the same filesystem so the final swap is two true
-    renames (original aside, compacted in) — the source dataset is never
-    deleted until the new copy is in place, so a crash at any point leaves
-    at least one complete copy next to ``path``. On a real lake this is
-    Delta/Iceberg OPTIMIZE or a partition-scoped rewrite job."""
-    import os
-    import shutil
-
+    pruning works on point lookups. The swap is ``replace_dir``'s, so a
+    crash at any point leaves a complete copy that the next ``read_layer``
+    or ``compact_layer`` recovers. On a real lake this is Delta/Iceberg
+    OPTIMIZE or a partition-scoped rewrite job."""
+    recover_dir(path)
     df = spark.read.parquet(path)
     out = df.coalesce(target_files)
     if order_cols:
         out = df.repartition(target_files).sortWithinPartitions(*order_cols)
-    norm = path.rstrip("/")
-    tmp = norm + ".compact_tmp"
-    old = norm + ".old"
-    shutil.rmtree(tmp, ignore_errors=True)
-    out.write.mode("overwrite").parquet(tmp)
-    shutil.rmtree(old, ignore_errors=True)
-    os.rename(norm, old)
-    try:
-        os.rename(tmp, norm)
-    except OSError:
-        os.rename(old, norm)  # roll back: the original is still intact
-        raise
-    shutil.rmtree(old)
+    replace_dir(path, out.write.mode("overwrite").parquet)

@@ -18,12 +18,12 @@ downstream scans prune.
 from __future__ import annotations
 
 import os
-import shutil
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from flink_realtime_spark.plans.layout import recover_dir, replace_dir
 from flink_realtime_spark.registry import query
 from flink_realtime_spark.streaming.sources import events_stream
 from flink_realtime_spark.streaming.stateful import latest_image
@@ -84,7 +84,8 @@ class ParquetUpsertStore:
       ``WHEN MATCHED AND s.<tombstone> THEN DELETE`` before the UPDATE
       clause (and skip inserting tombstone-only keys).
     - atomicity → the table format's commit protocol replaces the
-      rename-swap; ``_recover_interrupted_swap`` becomes unnecessary.
+      rename-swap (``plans.layout.replace_dir``); ``recover_dir`` becomes
+      unnecessary.
     - idempotent retries → MERGE re-run with the same source is a no-op
       because the MATCHED predicate is strict (older-or-equal rows don't
       overwrite), matching this store's crash-replay contract.
@@ -113,28 +114,16 @@ class ParquetUpsertStore:
         # immediately is safe.
         self.tombstone_col = tombstone_col
 
-    def _recover(self) -> None:
-        """Batch-boundary atomicity under HARD crashes (SIGKILL/power
-        loss): if a previous merge died between rename(path -> .old) and
-        rename(.staging -> path), the only complete state is .old —
-        without recovery the next read() returns None and the store
-        silently reinitializes from one batch's rows (total state loss).
-        Roll .old back and drop the incomplete staging dir; the streaming
-        checkpoint replays the interrupted batch, and replay is a no-op
-        by the latest-image contract."""
-        old = self.path + ".old"
-        if not os.path.isdir(self.path) and os.path.isdir(old):
-            os.rename(old, self.path)
-            shutil.rmtree(self.path + ".staging", ignore_errors=True)
-
     def read(self) -> DataFrame | None:
-        self._recover()
+        recover_dir(self.path)
         if not os.path.isdir(self.path):
             return None
         return self.spark.read.parquet(self.path)
 
     def merge(self, batch_df: DataFrame) -> None:
-        self._recover()
+        # The checkpoint replays a batch a hard crash interrupted; after
+        # recover_dir that replay is a no-op by the latest-image contract.
+        recover_dir(self.path)
         # schema-pinned read (class docstring): no inference job per batch
         merged = batch_df
         if os.path.isdir(self.path):
@@ -143,23 +132,7 @@ class ParquetUpsertStore:
         compacted = latest_image(merged, self.keys, self.order_cols)
         if self.tombstone_col is not None:
             compacted = compacted.filter(~F.col(self.tombstone_col))
-        tmp = self.path + ".staging"
-        compacted.write.mode("overwrite").parquet(tmp)
-        # Rename-swap, never rmtree-then-rename: the store must hold a
-        # complete state under a crash at ANY point (the .old window is
-        # covered by _recover above; production form is a Delta/Iceberg
-        # MERGE where the log gives this for free).
-        old = self.path + ".old"
-        shutil.rmtree(old, ignore_errors=True)
-        if os.path.isdir(self.path):
-            os.rename(self.path, old)
-        try:
-            os.rename(tmp, self.path)
-        except BaseException:
-            if os.path.isdir(old):
-                os.rename(old, self.path)
-            raise
-        shutil.rmtree(old, ignore_errors=True)
+        replace_dir(self.path, compacted.write.mode("overwrite").parquet)
 
 
 def upsert_sink(

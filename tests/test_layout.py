@@ -1,6 +1,8 @@
 """Layout-strategy proofs (SCALE.md): partition pruning on partitioned
 layers and exchange-free joins on bucketed tables — asserted against the
-actual physical plans, not just claimed."""
+actual physical plans, not just claimed. The directory swap every store
+uses (``replace_dir``/``recover_dir``) is checked on plain files in each
+state a crash can leave behind."""
 
 from __future__ import annotations
 
@@ -9,8 +11,11 @@ import io
 import os
 import tempfile
 
+import pytest
 from pyspark.sql import functions as F
 
+from flink_realtime_spark.plans import layout
+from flink_realtime_spark.plans.layout import recover_dir, replace_dir
 from flink_realtime_spark.tables import load_table
 from tests.conftest import SF_DIR
 
@@ -106,6 +111,140 @@ def test_compact_layer_reduces_files_preserves_rows(spark):
     import shutil
 
     shutil.rmtree(d, ignore_errors=True)
+
+
+def test_read_layer_recovers_compaction_killed_between_renames(spark, tmp_path):
+    """A compaction killed between its two renames leaves the whole
+    dataset in ``path.old`` and nothing at ``path``; the next read
+    restores it instead of failing with PATH_NOT_FOUND."""
+    from flink_realtime_spark.plans.layout import read_layer
+
+    path = str(tmp_path / "dws")
+    ev = load_table(spark, SF_DIR, "events").select("event_id", "user_id")
+    ev.write.parquet(path)
+    before = sorted(read_layer(spark, path).collect())
+
+    os.rename(path, path + ".old")
+    assert sorted(read_layer(spark, path).collect()) == before
+    assert os.listdir(tmp_path) == ["dws"]
+
+
+# ---- the crash-safe directory swap, on plain files -----------------------
+
+
+def _writer(tag: str):
+    """A write callback producing one complete two-file copy."""
+
+    def write(d: str) -> None:
+        os.makedirs(d)
+        for i in range(2):
+            with open(os.path.join(d, f"part-{i}"), "w") as f:
+                f.write(tag)
+
+    return write
+
+
+def _half_written(d: str) -> None:
+    os.makedirs(d)
+    with open(os.path.join(d, "part-0"), "w") as f:
+        f.write("partial")
+
+
+def _tree(root) -> dict:
+    """{directory: {file: text}} for every directory under ``root``."""
+    return {
+        d.name: {f.name: f.read_text() for f in sorted(d.iterdir())}
+        for d in sorted(root.iterdir())
+    }
+
+
+A = {"store": {"part-0": "a", "part-1": "a"}}
+B = {"store": {"part-0": "b", "part-1": "b"}}
+
+
+def _staging_half_written(path: str) -> None:
+    replace_dir(path, _writer("a"))
+    _half_written(path + ".staging")
+
+
+def _path_moved_to_old(path: str) -> None:
+    replace_dir(path, _writer("a"))
+    _writer("b")(path + ".staging")
+    os.rename(path, path + ".old")
+
+
+def _staging_renamed_in(path: str) -> None:
+    _path_moved_to_old(path)
+    os.rename(path + ".staging", path)
+
+
+def _first_write_in_staging(path: str) -> None:
+    _half_written(path + ".staging")
+
+
+@pytest.mark.parametrize(
+    "crash, expect",
+    [
+        (_staging_half_written, A),
+        (_path_moved_to_old, A),
+        (_staging_renamed_in, B),
+        (_first_write_in_staging, {}),
+    ],
+    ids=[
+        "staging_half_written",
+        "path_moved_to_old",
+        "staging_renamed_in",
+        "first_write_in_staging",
+    ],
+)
+def test_recover_dir_leaves_one_complete_copy(tmp_path, crash, expect):
+    path = str(tmp_path / "store")
+    crash(path)
+    recover_dir(path)
+    assert _tree(tmp_path) == expect
+    recover_dir(path)  # idempotent
+    assert _tree(tmp_path) == expect
+
+
+def test_replace_dir_swaps_in_the_new_copy(tmp_path):
+    path = str(tmp_path / "store")
+    replace_dir(path, _writer("a"))
+    assert _tree(tmp_path) == A
+    replace_dir(path + "/", _writer("b"))
+    assert _tree(tmp_path) == B
+
+
+def test_replace_dir_failed_write_leaves_path_untouched(tmp_path):
+    path = str(tmp_path / "store")
+    replace_dir(path, _writer("a"))
+
+    def fail(d: str) -> None:
+        _half_written(d)
+        raise RuntimeError("write failed")
+
+    with pytest.raises(RuntimeError):
+        replace_dir(path, fail)
+    assert not os.path.exists(path + ".old")
+    assert _tree(tmp_path)["store"] == A["store"]
+
+
+def test_replace_dir_rolls_back_a_failed_rename(tmp_path, monkeypatch):
+    path = str(tmp_path / "store")
+    replace_dir(path, _writer("a"))
+    rename = os.rename
+    calls = []
+
+    def second_fails(src, dst):
+        calls.append(src)
+        if len(calls) == 2:
+            raise OSError("rename failed")
+        rename(src, dst)
+
+    monkeypatch.setattr(layout.os, "rename", second_fails)
+    with pytest.raises(OSError):
+        replace_dir(path, _writer("b"))
+    assert calls[:2] == [path, path + ".staging"]
+    assert _tree(tmp_path) == A
 
 
 def test_dynamic_partition_pruning_from_dim_filter(spark):

@@ -718,3 +718,71 @@ def test_python_crossings_install_worker_memo():
         for line in _unwrapped_crossings(path.read_text())
     ]
     assert hits == []
+
+
+def _renames(source: str) -> list[tuple[str, int]]:
+    """(outermost enclosing function, line) of every ``os.rename`` /
+    ``os.replace`` call; module-level calls report ``<module>``."""
+    import ast
+
+    hits = []
+
+    def visit(node, outer):
+        for child in ast.iter_child_nodes(node):
+            if (
+                isinstance(child, ast.Call)
+                and isinstance(child.func, ast.Attribute)
+                and child.func.attr in ("rename", "replace")
+                and isinstance(child.func.value, ast.Name)
+                and child.func.value.id == "os"
+            ):
+                hits.append((outer or "<module>", child.lineno))
+            is_def = isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef))
+            visit(child, outer or (child.name if is_def else None))
+
+    visit(ast.parse(source), None)
+    return hits
+
+
+def test_rename_guard_finds_every_rename():
+    src = (
+        "import os\n"
+        "os.rename('a', 'b')\n"
+        "def replace_dir(p, w):\n"
+        "    os.rename(p, p + '.old')\n"
+        "    def inner():\n"
+        "        os.replace('x', 'y')\n"
+        "class Store:\n"
+        "    def merge(self):\n"
+        "        os.rename(self.path, self.old)\n"
+        "'s'.replace('a', 'b')\n"
+        "pathlib.Path('z').rename('w')\n"
+    )
+    assert _renames(src) == [
+        ("<module>", 2), ("replace_dir", 4), ("replace_dir", 6), ("merge", 9)
+    ]
+
+
+def test_one_directory_swap():
+    """CI guard: the engine swaps directories in one place. Every rename
+    is in plans/layout.py's recover_dir/replace_dir, apart from
+    state_change_feed's single-file move of a staged parquet part; a
+    store that hand-rolls its own rename-swap fails here."""
+    import pathlib
+
+    import flink_realtime_spark
+
+    root = pathlib.Path(flink_realtime_spark.__file__).parent
+    feed = ("streaming/state_inspect.py", "state_change_feed")
+    allowed = {
+        ("plans/layout.py", "recover_dir"),
+        ("plans/layout.py", "replace_dir"),
+        feed,
+    }
+    hits = [
+        (path.relative_to(root).as_posix(), fn, line)
+        for path in sorted(root.rglob("*.py"))
+        for fn, line in _renames(path.read_text())
+    ]
+    assert [h for h in hits if h[:2] not in allowed] == []
+    assert [h[:2] for h in hits].count(feed) == 1

@@ -448,8 +448,12 @@ def test_file_stream_trigger_launches_no_listing_job(spark, tmp_path):
 def test_mv_store_survives_crash_mid_swap(spark, chunked_events_dir, tmp_path):
     """Same crash injection for the MV fold store: state stranded in .old
     must be recovered by the next fold, and the refolded MV must equal the
-    from-scratch recompute."""
+    from-scratch recompute. The late-refire store (windows/ + wm/ swapped
+    as one directory) gets the same injection: its serve must return the
+    pre-crash board."""
     from flink_realtime_spark.operators.serving import (
+        late_refire_serve,
+        late_refire_stream_writer,
         mv_merge,
         mv_partial_events,
         mv_serve,
@@ -465,11 +469,28 @@ def test_mv_store_survives_crash_mid_swap(spark, chunked_events_dir, tmp_path):
     expect = _rows(mv_serve(spark, mv_dir), ["d", "event_type", "n_events"])
 
     os.rename(mv_dir, mv_dir + ".old")
-    os.makedirs(mv_dir + ".tmp")
+    os.makedirs(mv_dir + ".staging")
     got = _rows(mv_serve(spark, mv_dir), ["d", "event_type", "n_events"])
     assert got == expect
     assert not os.path.isdir(mv_dir + ".old")
-    assert not os.path.isdir(mv_dir + ".tmp")
+    assert not os.path.isdir(mv_dir + ".staging")
+
+    refire_dir = str(tmp_path / "refire_crash")
+    q = (
+        late_refire_stream_writer(sdf, refire_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    board = late_refire_serve(spark, refire_dir)
+    before = _rows(board, board.columns)
+    assert before
+
+    os.rename(refire_dir, refire_dir + ".old")
+    os.makedirs(refire_dir + ".staging")
+    assert _rows(late_refire_serve(spark, refire_dir), board.columns) == before
+    assert not os.path.isdir(refire_dir + ".old")
+    assert not os.path.isdir(refire_dir + ".staging")
 
 
 def test_stream_stream_interval_join(spark):
